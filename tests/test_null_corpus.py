@@ -73,3 +73,26 @@ def test_every_query_matches_oracle_on_null_injected_corpus(spark, null_sf_dir):
             failures[name] = f"{type(e).__name__}: {str(e).splitlines()[0][:140]}"
         spark.catalog.clearCache()
     assert not failures, failures
+
+
+def test_source_length_ks_matches_oracle_with_null_sources(spark, tmp_path):
+    """``documents.source`` is nullable but the testdata never carries a
+    NULL there.  ``source_length_ks`` builds a source -> count map per
+    length, and a NULL map key aborts the whole query; on a copy with
+    the source of every seventh document NULL it must still match its
+    oracle, the NULL source reported as its own row."""
+    out = str(tmp_path)
+    df = load_table(spark, SRC_SF, "documents").withColumn(
+        "source",
+        F.when(F.col("doc_id") % 7 == 0, F.lit(None)).otherwise(F.col("source")),
+    )
+    assert df.filter(F.col("source").isNull()).count() > 0
+    df.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(out, "documents.parquet")
+    )
+    name = "source_length_ks"
+    res = check_query(spark, name, all_queries()[name], all_oracles()[name], out)
+    assert res.ok, res.detail
+    assert res.spark_rows == len(
+        load_table(spark, SRC_SF, "documents").select("source").distinct().collect()
+    ) + 1

@@ -337,6 +337,29 @@ def test_embedding_cosine_only_broadcast_is_the_cfg_row(spark):
         ), lines[i : i + 5]
 
 
+@pytest.mark.parametrize(
+    "name,exchanges,broadcasts",
+    [("simhash_hamming_pairs", 3, 0), ("adamic_adar_links", 3, 1)],
+)
+def test_pair_generator_exchange_counts(spark, name, exchanges, broadcasts):
+    """The two pair generators the query-mix benchmark times, through
+    ``operators/pairs.py``, counted on the executed (final adaptive)
+    plan.  SimHash block self-join: the fingerprint aggregate, the
+    bucket-guard window and the candidate distinct; the join itself
+    adds no exchange.  Adamic capped fan-out: the edge distinct and
+    its broadcast orders-lineitem join, the cap window (which the pair
+    groupBy reuses) and the pair aggregate."""
+    from perfbench.plancount import count_nodes, formatted_plan
+
+    df = all_queries()[name](spark, SF_DIR)
+    df.collect()
+    counts = count_nodes(formatted_plan(df))
+    spark.catalog.clearCache()
+    assert (counts["Exchange"], counts["BroadcastExchange"]) == (
+        exchanges, broadcasts,
+    ), counts
+
+
 # --- Warehouse-ops family: the scale claims each docstring makes -----------
 
 

@@ -87,53 +87,56 @@ def test_load_table_parallel_directory_row_parity(spark, dir_sf, sf_dir):
     assert a == b
 
 
-def test_neardup_part_pair_fanout_hot_bucket(spark):
-    """The r14 skew-safe candidate generation: a bucket whose occupancy
-    exceeds _NEARDUP_PART_OCC splits into multiple part-pair groups
-    (never exercised by the shipped testdata, where max occupancy is
-    ~43) — every unordered same-bucket pair must still surface exactly
-    once.  Brute-force cross-check on a synthetic 150-vector hot bucket
-    plus a small disjoint bucket."""
+@pytest.mark.parametrize(
+    "strategy,cap", [("join", None), ("fanout", None), ("fanout", 8)],
+    ids=["join", "fanout", "fanout-capped"],
+)
+def test_same_key_pairs_match_brute_force(spark, strategy, cap):
+    """``same_key_pairs`` against ``itertools.combinations`` per bucket.
+    Under two keys (2 bands x bucket key): a 150-member hot bucket
+    (more than PART_OCC, so the graded fan-out splits it into part-pair
+    groups), a 10-member bucket holding a repeated member and a NULL
+    member, a singleton bucket, and NULL-key rows.  Every unordered
+    same-key pair must surface exactly once (a repeated member once per
+    copy, never with itself), NULL keys and members never pair, and
+    each payload lands on its own member's side.  ``cap`` only skips
+    the grading, so the pairs are the same even where a bucket exceeds
+    it."""
     import itertools
+    from collections import defaultdict
 
-    from pyspark.sql import functions as F
+    from wiki_references_db_spark.operators.pairs import PART_OCC, same_key_pairs
 
-    from wiki_references_db_spark.queries.training import (
-        _NEARDUP_PART_OCC,
-        _neardup_pairs_from_bands,
+    assert 150 > PART_OCC
+    members = (
+        [(7, m) for m in range(150)]
+        + [(9, m) for m in range(1000, 1010)]
+        + [(9, 1003), (9, None), (11, 2000), (None, 3000), (None, 3001)]
     )
-
-    assert 150 > _NEARDUP_PART_OCC
-    # 150 identical-sign vectors (one hot bucket per band) + 10 vectors
-    # of the opposite sign (a small bucket per band).  All confirm at
-    # cosine 1.0 within a bucket; cross-bucket pairs never collide.
-    rows = [(i, [1.0] * 4) for i in range(150)] + [
-        (1000 + i, [-1.0] * 4) for i in range(10)
+    rows = [
+        (band, key, m, None if m is None else f"w{m}")
+        for band in (0, 1)
+        for key, m in members
     ]
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    nrm = F.sqrt(F.expr(
-        "aggregate(embedding, 0.0D, (acc, x) -> acc + x * x)"
-    ))
-    bands = (
-        e.select("vec_id", nrm.alias("nrm"))
-        .crossJoin(spark.range(2).select(F.col("id").cast("int").alias("band_id")))
-        .withColumn(
-            "band_key",
-            F.when(F.col("vec_id") < 1000, F.lit(7)).otherwise(F.lit(9)).cast("long"),
-        )
-        .select("vec_id", "nrm", "band_id", "band_key")
-    )
+    df = spark.createDataFrame(rows, "band int, key long, m long, w string")
     got = sorted(
-        (r.id_a, r.id_b)
-        for r in _neardup_pairs_from_bands(e, bands).collect()
+        (r.band, r.key, r.m_a, r.m_b, r.w_a, r.w_b)
+        for r in same_key_pairs(
+            df, ["band", "key"], "m", payload=["w"], strategy=strategy, cap=cap
+        ).collect()
     )
+    buckets = defaultdict(list)
+    for band, key, m, _ in rows:
+        if key is not None and m is not None:
+            buckets[(band, key)].append(m)
     want = sorted(
-        itertools.chain(
-            itertools.combinations(range(150), 2),
-            itertools.combinations(range(1000, 1010), 2),
-        )
+        (band, key, a, b, f"w{a}", f"w{b}")
+        for (band, key), ms in buckets.items()
+        for a, b in itertools.combinations(sorted(ms), 2)
+        if a < b
     )
-    assert got == [tuple(p) for p in want]
+    assert len(want) == 2 * (150 * 149 // 2 + 10 * 9 // 2 + 9)
+    assert got == want
 
 
 def test_map_assign_matches_window_argmax(spark):

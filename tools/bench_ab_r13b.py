@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Round-13 optimization A/B shoot-out, second batch (same-JVM,
-alternating passes — the bench_ab_r13.py methodology): settle the three
+alternating passes — the round-13 methodology, OPTIMIZATION_r13.md): settle the three
 after-profile deltas that exceeded the container-drift band.  Evidence,
 not part of the engine.
 
@@ -8,8 +8,8 @@ Variants
   phrase:     cur  = per-length union branches + plain load_table
                      (the batch-4 committed form)
               ltp  = per-length union branches + load_table_parallel
-                     (the r12 loader — the 4-variant A/B in
-                     bench_ab_r13.py never tested this combination)
+                     (the r12 loader — the round-13 4-variant A/B
+                     never tested this combination)
   matryoshka: cur  = pre-sliced (queries x dims) broadcast (batch 2/3)
               r12  = two broadcasts (queries, dims); per-corpus-row
                      query-slice + norm recompute (round-start form,

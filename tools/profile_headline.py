@@ -1,9 +1,12 @@
 #!/usr/bin/env python3
 """Per-query optimization profile over the bench.py headline list:
 
-- formatted physical plan -> plans/<tag>/<query>_<suffix>.txt
-- structural counts from the plan (shuffle exchanges, broadcast
-  exchanges, join strategies, Python eval nodes, codegen spans)
+- formatted executed (final adaptive) plan ->
+  plans/<tag>/<query>_<suffix>.txt
+- structural counts from that plan: exchanges, broadcast-hash and
+  sort-merge joins and codegen stages from
+  ``perfbench.plancount.count_nodes``; the other operators by name on
+  its numbered tree
 - runtime structure via the status tracker (jobs / stages / tasks per
   noop-sink execution — the fixed-overhead proxy the wall-clock noise
   hides at sf0.1)
@@ -28,31 +31,36 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.plancount import count_nodes, formatted_plan, tree_section  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Counted in the numbered-tree section of the formatted plan only.
+# count_nodes key -> reported name.
+NODES = {
+    "Exchange": "shuffle_exchange",
+    "BroadcastExchange": "broadcast_exchange",
+    "SortMergeJoin": "sort_merge_join",
+    "BroadcastHashJoin": "broadcast_hash_join",
+    "WholeStageCodegen": "codegen_spans",
+}
+# Other operators, counted by name on the numbered-tree lines.
 OPS = {
-    "shuffle_exchange": r"^\s*[+:-]*\s*\(?\d*\)?\s*Exchange hashpartitioning|Exchange rangepartitioning|Exchange RoundRobinPartitioning|Exchange SinglePartition",
-    "broadcast_exchange": r"BroadcastExchange",
-    "sort_merge_join": r"SortMergeJoin",
-    "broadcast_hash_join": r"BroadcastHashJoin",
-    "shuffled_hash_join": r"ShuffledHashJoin",
-    "bnl_join": r"BroadcastNestedLoopJoin",
-    "cartesian": r"CartesianProduct",
-    "python_eval": r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow",
-    "sort": r"^\s*[+:-]*\s*\(?\d*\)?\s*\*?\(?\d*\)?\s*Sort ",
-    "window": r"Window",
-    "codegen_spans": r"WholeStageCodegen",
-    "scans": r"Scan parquet|FileScan",
-    "in_memory_scan": r"InMemoryTableScan",
+    "shuffled_hash_join": "ShuffledHashJoin",
+    "bnl_join": "BroadcastNestedLoopJoin",
+    "cartesian": "CartesianProduct",
+    "python_eval": "BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow",
+    "sort": "Sort",
+    "window": "Window",
+    "scans": "Scan parquet|FileScan",
+    "in_memory_scan": "InMemoryTableScan",
 }
 
 
 def plan_counts(plan: str) -> dict:
-    tree = plan.split("\n\n")[0]  # numbered tree section
-    out = {}
+    out = {name: n for key, n in count_nodes(plan).items() if (name := NODES.get(key))}
+    tree = tree_section(plan)
     for key, pat in OPS.items():
-        out[key] = len(re.findall(pat, tree, flags=re.M))
+        out[key] = len(re.findall(rf"^[\s:+\-|]*(?:\*\s*)?(?:{pat})\b", tree, flags=re.M))
     return out
 
 
@@ -82,17 +90,16 @@ def main() -> None:
     for name in names:
         fn = qs[name]
         df = fn(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+
+        # Warm run (fresh build, like bench's warmup at full SF), on the
+        # DataFrame's own query execution so its plan is the final one.
+        spark.sparkContext.setJobDescription(f"{name}: warm")
+        df._jdf.queryExecution().toRdd().count()
+        plan = formatted_plan(df)
         if not args.no_plans:
             with open(os.path.join(plans_dir, f"{name}_{args.suffix}.txt"), "w") as f:
                 f.write(plan)
         counts = plan_counts(plan)
-
-        # Warm run (fresh build, like bench's warmup at full SF).
-        spark.sparkContext.setJobDescription(f"{name}: warm")
-        df.write.mode("overwrite").format("noop").save()
 
         # Planner-cost proxy: analysis + optimization + physical
         # planning of a FRESH DataFrame (no execution).  The noop save

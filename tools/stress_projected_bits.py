@@ -39,6 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from wiki_references_db_spark.operators.pairs import same_key_pairs
 from wiki_references_db_spark.queries.training import (
     _PROJ_MAX_BITS,
     _adaptive_bits_cfg,
@@ -104,16 +105,13 @@ def main() -> None:
         assert "CartesianProduct" not in plan, "all-pairs plan leaked in"
 
         # Candidate volume: the distinct same-band collision count —
-        # the quantity the adaptive rule holds ~linear in n.
+        # the quantity the adaptive rule holds ~linear in n — from the
+        # same fan-out the dedup tail uses.
         cand = (
-            bands.alias("a")
-            .join(
-                bands.alias("b"),
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
+            same_key_pairs(
+                bands, ["band_id", "band_key"], "vec_id", strategy="fanout"
             )
-            .select("a.vec_id", "b.vec_id")
+            .select("vec_id_a", "vec_id_b")
             .distinct()
             .count()
         )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wiki_references_db_spark.operators.graph import connected_components
+from wiki_references_db_spark.operators.pairs import same_key_pairs
 from wiki_references_db_spark.queries import register
 from wiki_references_db_spark.queries.generic import _dsum, dsum
 from wiki_references_db_spark.storage import persist_corpus
@@ -1018,28 +1019,13 @@ def fuzzy_match_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring("text", 1, 40).alias("probe"),
         F.floor(F.length("text") / 100).alias("len_bucket"),
     )
-    a = keyed.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("probe").alias("probe_a"),
-        F.col("len_bucket").alias("lb_a"),
-    )
-    b = keyed.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("probe").alias("probe_b"),
-        F.col("len_bucket").alias("lb_b"),
-    )
     return (
-        a.join(
-            b,
-            (F.col("lang_a") == F.col("lang_b"))
-            & (F.col("lb_a") == F.col("lb_b"))
-            & (F.col("doc_a") < F.col("doc_b")),
+        same_key_pairs(
+            keyed, ["lang", "len_bucket"], "doc_id", payload=["probe"], strategy="join"
         )
         .select(
-            "doc_a",
-            "doc_b",
+            F.col("doc_id_a").alias("doc_a"),
+            F.col("doc_id_b").alias("doc_b"),
             F.levenshtein("probe_a", "probe_b").cast("long").alias("edit_dist"),
         )
         .filter(F.col("edit_dist") <= 20)
@@ -1863,16 +1849,9 @@ def triangle_count_cosupplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is partitioned by node, never global."""
     li = load_table(spark, sf_dir, "lineitem")
     os_ = li.select("l_orderkey", "l_suppkey").distinct()
-    a, b = os_.alias("a"), os_.alias("b")
     raw = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_suppkey") < F.col("b.l_suppkey")),
-        )
-        .select(
-            F.col("a.l_suppkey").alias("u"), F.col("b.l_suppkey").alias("v")
-        )
+        same_key_pairs(os_, ["l_orderkey"], "l_suppkey", strategy="join")
+        .select(F.col("l_suppkey_a").alias("u"), F.col("l_suppkey_b").alias("v"))
         .distinct()
     )
     adj = raw.select(F.col("u").alias("s"), F.col("v").alias("t")).union(
@@ -1937,26 +1916,15 @@ def triangle_count_cosupplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    # r13 optimization (guide §2.4): wedges were an oriented x oriented
-    # self-join on src (two more shuffles of the edge list).  The
-    # compact-forward orientation bounds per-src out-degree at
-    # O(sqrt(m)), so each apex's out-neighborhood fits one sorted
-    # bucket array — sort_array over (ddst, dst) structs reproduces
-    # the (degree, id) wedge order exactly, and the i<j fan-out emits
-    # each wedge once, map-side, off ONE groupBy(src) shuffle.
-    from wiki_references_db_spark.queries.training import _bucket_pairs_expr
-
-    nbrs = oriented.groupBy("src").agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("ddst"), F.col("dst")))
-        ).alias("ns")
-    )
-    wedges = nbrs.select(
-        F.col("src").alias("apex"), F.explode(_bucket_pairs_expr("ns")).alias("p")
+    # Wedges are the same-apex pairs of out-neighbors, member
+    # (ddst, dst) so the pair order is the (degree, id) orientation.
+    wedges = same_key_pairs(
+        oriented.select("src", F.struct("ddst", "dst").alias("w")),
+        ["src"], "w", strategy="fanout",
     ).select(
-        "apex",
-        F.col("p.doc_a.dst").alias("x"),
-        F.col("p.doc_b.dst").alias("y"),
+        F.col("src").alias("apex"),
+        F.col("w_a.dst").alias("x"),
+        F.col("w_b.dst").alias("y"),
     )
     closure = oriented.select(
         F.col("src").alias("x"), F.col("dst").alias("y")
@@ -2393,10 +2361,8 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_source = hs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_contents")
     )
-    a = hs.select(F.col("h"), F.col("source").alias("source_a"))
-    b = hs.select(F.col("h").alias("hb"), F.col("source").alias("source_b"))
     pair_hits = (
-        a.join(b, (F.col("h") == F.col("hb")) & (F.col("source_a") < F.col("source_b")))
+        same_key_pairs(hs, ["h"], "source", strategy="join")
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
@@ -3319,23 +3285,14 @@ def adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= _RA_NBR_CAP)
         .select("c", "s", "d")
     )
-    # r13 optimization (guide §2.4): the cap bounds every supplier's
-    # surviving customer list at _RA_NBR_CAP, so shared-neighbor pairs
-    # are generated MAP-SIDE from one sorted per-supplier bucket
-    # (<= C(cap, 2) pairs each) instead of the capped-adjacency
-    # self-join.  The bucket groupBy is keyed by the SAME column as
-    # the cap window, so it reuses that exchange (zero new shuffles).
-    buckets = capped.groupBy("s").agg(
-        F.max("d").alias("d"),
-        F.sort_array(F.collect_list("c")).alias("cs"),
-    )
-    from wiki_references_db_spark.queries.training import _bucket_pairs_expr
-
-    pairs = buckets.select(
-        "d", F.explode(_bucket_pairs_expr("cs")).alias("p")
+    # Shared-neighbor pairs per supplier: d is a function of s, so
+    # keying on (s, d) carries the degree to every pair, and the pair
+    # groupBy reuses the cap window's exchange on s.
+    pairs = same_key_pairs(
+        capped, ["s", "d"], "c", strategy="fanout", cap=_RA_NBR_CAP
     )
     scored = pairs.groupBy(
-        F.col("p.doc_a").alias("cust_a"), F.col("p.doc_b").alias("cust_b")
+        F.col("c_a").alias("cust_a"), F.col("c_b").alias("cust_b")
     ).agg(
         F.count(F.lit(1)).alias("n_common_suppliers"),
         F.sum(
@@ -3419,7 +3376,7 @@ def phrase_tag_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary of millions of phrases still broadcasts in MBs); the
     only shuffle is the final per-(doc, tag) aggregation.  No regex,
     no UDF — pure codegen expressions."""
-    # r13: measured A/B (tools/bench_ab_r13.py, min-of-2 x 3 alternated
+    # r13: measured A/B (OPTIMIZATION_r13.md, min-of-2 x 3 alternated
     # passes at sf0.1) kept this r12 union-of-lengths form: per-length
     # branches 0.76s vs one-pass struct-array concat 1.01s, one-pass +
     # compute repartition 0.91s, one-pass flat-array 1.02s.  The narrow

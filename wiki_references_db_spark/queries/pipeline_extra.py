@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from wiki_references_db_spark.operators.pairs import same_key_pairs
 from wiki_references_db_spark.queries import register
 from wiki_references_db_spark.storage import persist_corpus
 from wiki_references_db_spark.queries.generic import _dsum, dsum
@@ -1387,22 +1388,12 @@ def source_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     nrm = cents.groupBy("source").agg(
         F.sum(F.col("c") * F.col("c")).alias("n2")
     )
-    a = cents.select(
-        F.col("source").alias("source_a"), "j", F.col("c").alias("ca")
-    )
-    b = cents.select(
-        F.col("source").alias("source_b"),
-        F.col("j").alias("jb"),
-        F.col("c").alias("cb"),
-    )
     dots = (
-        a.join(
-            F.broadcast(b),
-            (F.col("j") == F.col("jb"))
-            & (F.col("source_a") < F.col("source_b")),
+        same_key_pairs(
+            F.broadcast(cents), ["j"], "source", payload=["c"], strategy="join"
         )
         .groupBy("source_a", "source_b")
-        .agg(F.sum(F.col("ca") * F.col("cb")).alias("dot"))
+        .agg(F.sum(F.col("c_a") * F.col("c_b")).alias("dot"))
     )
     na = nrm.select(
         F.col("source").alias("source_a"), F.col("n2").alias("n2a")

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from wiki_references_db_spark.operators.pairs import same_key_pairs
 from wiki_references_db_spark.operators.zorder import (
     morton_interleave8,
     morton_interleave8_sql,
@@ -549,17 +550,11 @@ def audience_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     aud = e.select("event_type", "user_id").distinct()
     sizes = aud.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_users"))
-    a = aud.alias("a")
-    b = aud.alias("b")
     overlap = (
-        a.join(
-            b,
-            (F.col("b.user_id") == F.col("a.user_id"))
-            & (F.col("a.event_type") < F.col("b.event_type")),
-        )
+        same_key_pairs(aud, ["user_id"], "event_type", strategy="join")
         .groupBy(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
+            F.col("event_type_a").alias("type_a"),
+            F.col("event_type_b").alias("type_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )
@@ -1472,12 +1467,16 @@ def source_length_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DOMAIN, ~tens of entries, never corpus-proportional), and the
     # dense cell is an element_at lookup.  One exchange and one join
     # fewer; A/B won 5/6 min-of-2 passes (0.580 → 0.549 s min,
-    # bench_runs/r14/ab_ks_mapgrid.txt).
+    # bench_runs/r14/ab_ks_mapgrid.txt).  A NULL source stays in g but
+    # not in the map (a NULL map key aborts the query): its own grid
+    # cells read 0, as the oracle's LEFT JOIN on source leaves them.
     glob = counts.groupBy("v").agg(
         F.sum("c").alias("g"),
-        F.map_from_entries(F.collect_list(F.struct("source", "c"))).alias(
-            "m"
-        ),
+        F.map_from_entries(
+            F.collect_list(
+                F.when(F.col("source").isNotNull(), F.struct("source", "c"))
+            )
+        ).alias("m"),
     )
     total_all = counts.agg(F.sum("c").alias("tot_all"))
     grid = (

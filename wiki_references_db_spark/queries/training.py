@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from wiki_references_db_spark.operators.pairs import same_key_pairs
 from wiki_references_db_spark.queries import register
 from wiki_references_db_spark.storage import persist_corpus
 from wiki_references_db_spark.tables import load_table, load_table_parallel
@@ -202,15 +203,9 @@ def _capped_pair_counts(ds: DataFrame) -> tuple[DataFrame, DataFrame]:
     rows = persist_corpus(
         all_rows.join(F.broadcast(hot), "shingle", "left_anti")
     )
-    a = rows.alias("a")
-    b = rows.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        same_key_pairs(rows, ["shingle"], "doc_id", strategy="join")
+        .groupBy(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     return counts, pairs
@@ -400,18 +395,9 @@ def _band_candidates(band_rows: DataFrame) -> DataFrame:
     candidate-generation rule shared by the production dedup and its
     recall harness (a drift here would make the harness measure a
     different index than the dedup run uses)."""
-    a = band_rows.alias("a")
-    b = band_rows.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
+        same_key_pairs(band_rows, ["band_id", "band_key"], "doc_id", strategy="join")
+        .select(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
         .distinct()
     )
 
@@ -1211,8 +1197,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast — at the confirm step, the one corpus-sized broadcast in
     the tree), so the confirm needs no norm join at all: the only
     joins after candidate generation fetch the two embeddings by id.
-    At 100 TB the band tables are the only wide shuffle, and skewed
-    mega-buckets split via AQE skew-join handling.  Where a coarse
+    At 100 TB the band tables are the only wide shuffle, and a hot
+    band key splits into bounded part-pair groups (the fan-out of
+    ``operators/pairs.py``).  Where a coarse
     clustering exists, ``dedup_semdedup_cells`` is the alternative
     whose pair bound sum(|cell|^2) scales with the clustering
     granularity instead."""
@@ -1224,116 +1211,41 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _neardup_pairs_from_bands(raw, _neardup_band_rows(e, raw))
 
 
-_NEARDUP_PART_OCC = 64  # target members per pair-group (4x expected occupancy)
-
-
 def _neardup_pairs_from_bands(e: DataFrame, bands: DataFrame) -> DataFrame:
     """Shared banded-LSH tail: same-band candidate pairs (norms carried
     on the band rows — no norm join at the confirm), embeddings fetched
     by id, exact ordered-fold cosine filtered at the threshold.  Used
     by both the coordinate-sign and hashed-projection band generators.
 
-    Candidate generation is a SKEW-SAFE occupancy-scaled part-pair
-    fan-out (r14, guide §2.5 two-level keys + §3 join removal), not a
-    self-join: one window count grades every bucket's occupancy, each
-    band row is assigned a deterministic part
-    ``pmod(xxhash64(vec_id), P)`` with ``P = ceil(occ / T)`` and
-    emitted to the P part-pair groups ``(min(part, k), max(part, k))``,
-    and one sorted ``collect_list`` per (band, key, i, j) group emits
-    its pairs map-side — the triangular within-part pairs for i = j,
-    the i-side x j-side cross pairs for i < j, so every unordered
-    same-bucket pair surfaces exactly once.  Buckets at or under
-    T = _NEARDUP_PART_OCC (the adaptive band width keeps expected
-    occupancy ~16, so in practice ~all of them) have P = 1 and emit one
-    row to one group — byte-identical to the capped-bucket fan-out that
-    beat the r13 self-join.  A degenerate hot key (the 100 TB hazard: a
-    mass of identical-sign vectors) gets occ^2/T^2 bounded-size groups
-    spread across the cluster instead of going quadratic through one
-    task, group state stays <= ~2T collected structs regardless of
-    bucket size (a §5 memory bound no uncapped collect_list form has),
-    and the exchange carries occ^2/T rows for a bucket with occ^2
-    output pairs — proportional to the work that exists anyway.  Versus
-    the r13 self-join this also runs the band fold ONCE (one lineage;
-    the join recomputed it per side), drops the broadcast/SMJ machinery,
-    and shuffles band rows twice (window + group) instead of
-    twice-plus-join.  The graded band rows are persisted (both
-    variants — the generalization of the r13 projected-only pre-tail
-    persist; see the inline comment).  Null band keys
-    are filtered explicitly to preserve the old self-join's null
-    semantics (NULL = NULL never matched; a groupBy would have paired
-    the null bucket).
+    Candidates come from the skew-safe part-pair fan-out
+    (``operators/pairs.py``): the adaptive band width keeps expected
+    bucket occupancy ~16, but a degenerate hot band key must not put
+    its quadratic pair set through one task.
 
     The candidate frame is repartitioned to ``defaultParallelism`` ON
-    the pair key BEFORE the distinct (r13, guide §2.2): the candidate
-    rows are ~30 bytes each, so AQE's bytes-based coalescing (1 MB
-    floor, ``parallelismFirst``) folds the distinct's reduce side to a
-    single task — and the confirm downstream of it (two embedding
-    fetches + a 64-lane dot per row) serializes ~0.4 s of CPU at sf0.1
-    behind that one task.  A user-specified repartition count is exempt
-    from AQE coalescing, hash partitioning on the (id_a, id_b) subset
-    of the distinct key satisfies the aggregate's distribution (still
-    exactly ONE exchange), and the width tracks cluster size rather
-    than a local constant.  A session-wide 64k floor tried in r13 was
-    a NET loss across the headline and stays reverted."""
+    the pair key BEFORE the distinct (guide §2.2): the candidate rows
+    are ~30 bytes each, so AQE's bytes-based coalescing would fold the
+    distinct's reduce side to a single task and serialize the confirm
+    (two embedding fetches + a 64-lane dot per row) behind it.  A
+    user-specified repartition count is exempt from AQE coalescing,
+    and hash partitioning on (id_a, id_b) satisfies the distinct's
+    distribution, so this is still exactly ONE exchange."""
     par = e.sparkSession.sparkContext.defaultParallelism
-    T = _NEARDUP_PART_OCC
-    wb = bands.filter(
-        F.col("band_key").isNotNull() & F.col("vec_id").isNotNull()
-    ).withColumn(
-        "occ",
-        F.count(F.lit(1)).over(Window.partitionBy("band_id", "band_key")),
-    )
-    # Persist the occupancy-graded band rows (corpus-proportional build
-    # artifact: bands x 1 narrow row per vector — 4 rows/vector at the
-    # registered band count; DISK_ONLY per storage.py policy, released
-    # by the harness clearCache per query).  The band fold above is the
-    # heaviest map chain in this family (4 x bits FMA folds per row for
-    # the projected variant), and a warm catalog re-run reads the graded
-    # rows instead of re-folding: measured under the bench's exact
-    # min-of-2 methodology, coord 0.614 -> 0.431, projected
-    # 0.659 -> 0.474 s (bench_runs/r14/ab_cosine_band_persist.txt) —
-    # the r14 restoration of the r13 projected pre-tail persist, now on
-    # the shared tail so both variants carry it.
-    wb = persist_corpus(wb)
-    n_parts = f"(occ + {T - 1}) div {T}"
-    part = f"CAST(pmod(xxhash64(vec_id), {n_parts}) AS INT)"
-    parts = wb.select(
-        "band_id",
-        "band_key",
-        "vec_id",
-        "nrm",
-        F.expr(part).alias("part"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, CAST({n_parts} AS INT) - 1), "
-                f"k -> struct(least({part}, k) AS i, "
-                f"greatest({part}, k) AS j))"
-            )
-        ).alias("g"),
-    )
-    pair_expr = (
-        "CASE WHEN g.i = g.j THEN "
-        "flatten(transform(ms, (x, idx) -> "
-        "transform(slice(ms, idx + 2, size(ms) - idx - 1), "
-        "y -> struct(x.vec_id AS id_a, y.vec_id AS id_b, "
-        "x.nrm AS nrm_a, y.nrm AS nrm_b)))) "
-        "ELSE "
-        "flatten(transform(filter(ms, m -> m.part = g.i), x -> "
-        "transform(filter(ms, m -> m.part = g.j), y -> "
-        "struct(IF(x.vec_id < y.vec_id, x.vec_id, y.vec_id) AS id_a, "
-        "IF(x.vec_id < y.vec_id, y.vec_id, x.vec_id) AS id_b, "
-        "IF(x.vec_id < y.vec_id, x.nrm, y.nrm) AS nrm_a, "
-        "IF(x.vec_id < y.vec_id, y.nrm, x.nrm) AS nrm_b)))) END"
-    )
+    # Persist the band rows (bands x 1 narrow row per vector; DISK_ONLY
+    # per storage.py policy, released by the harness clearCache per
+    # query): the band fold is the heaviest map chain in this family
+    # (4 x bits FMA folds per row for the projected variant), and a
+    # warm catalog re-run reads the rows instead of re-folding
+    # (bench_runs/r14/ab_cosine_band_persist.txt).
     cand = (
-        parts.groupBy("band_id", "band_key", "g")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("vec_id", "nrm", "part"))
-            ).alias("ms")
+        same_key_pairs(
+            persist_corpus(bands), ["band_id", "band_key"], "vec_id",
+            payload=["nrm"], strategy="fanout",
         )
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.id_a", "p.id_b", "p.nrm_a", "p.nrm_b")
+        .select(
+            F.col("vec_id_a").alias("id_a"), F.col("vec_id_b").alias("id_b"),
+            "nrm_a", "nrm_b",
+        )
         .repartition(par, "id_a", "id_b")
         .distinct()
     )
@@ -3643,17 +3555,12 @@ def sparse_idf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     norms_f = wrows.groupBy("doc_id").agg(
         F.sum(F.col("qw") * F.col("qw")).alias("nf")
     )
-    a, b = wrows.alias("a"), wrows.alias("b")
     dots = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        same_key_pairs(wrows, ["shingle"], "doc_id", payload=["qw"], strategy="join")
         .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
         )
-        .agg(F.sum(F.col("a.qw") * F.col("b.qw")).alias("dotf"))
+        .agg(F.sum(F.col("qw_a") * F.col("qw_b")).alias("dotf"))
     )
     na = norms_f.select(F.col("doc_id").alias("doc_a"), F.col("nf").alias("na"))
     nb = norms_f.select(F.col("doc_id").alias("doc_b"), F.col("nf").alias("nb"))
@@ -3730,13 +3637,10 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     rrf_hybrid_generators fix retired); what remains is two exchanges
     of the narrow rows relation (shingle, then doc_id), both keyed
     aggregation-shaped.  Same-JVM A/B at sf0.1: 2.03 -> 1.21 s min
-    (bench_runs/r14/ab_jaccard_noj.txt).  A skew-safe part-pair
-    fan-out for the candidate self-join (the r14 cosine treatment) was
-    built, verified result-identical, and measured 1.82 s — SLOWER
-    than keeping the self-join here, because the prefix index is far
-    sparser than an LSH band table (rare-first prefixes structurally
-    disfavor hot buckets; a residual hot shingle partition at cluster
-    scale is split by AQE skew-join handling on this plain equi-join).
+    (bench_runs/r14/ab_jaccard_noj.txt).  Candidates are the join
+    strategy of ``operators/pairs.py``: the prefix index is far sparser
+    than an LSH band table, and a residual hot shingle partition is
+    split by AQE skew-join handling on the plain equi-join.
     """
     ds = _docs_with_shingles(spark, sf_dir).filter(F.size("shingles") > 0)
     rows = ds.select(
@@ -3757,20 +3661,13 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pos") <= F.expr("n - (3 * n + 4) div 5 + 1"))
         .select("doc_id", "n", "shingle")
     )
-    pa = prefix.select(
-        F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), "shingle"
-    )
-    pb = prefix.select(
-        F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), "shingle"
-    )
     cand = (
-        pa.join(pb, "shingle")
+        same_key_pairs(prefix, ["shingle"], "doc_id", payload=["n"], strategy="join")
         .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            & (5 * F.col("na") >= 3 * F.col("nb"))
-            & (5 * F.col("nb") >= 3 * F.col("na"))
+            (5 * F.col("n_a") >= 3 * F.col("n_b"))
+            & (5 * F.col("n_b") >= 3 * F.col("n_a"))
         )
-        .select("doc_a", "doc_b")
+        .select(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
         .distinct()
     )
     sa = ds.select(
@@ -4420,30 +4317,19 @@ def _semdedup_cells_report(assign: DataFrame) -> DataFrame:
     mem = persist_corpus(
         assign.select("cell", "vec_id", "embedding", "nrm")
     )
-    a = mem.select(
-        "cell",
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    b = mem.select(
-        F.col("cell").alias("cell_b"),
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    pairs = a.join(
-        b, (F.col("cell") == F.col("cell_b")) & (F.col("id_a") < F.col("id_b"))
+    pairs = same_key_pairs(
+        mem, ["cell"], "vec_id", payload=["embedding", "nrm"], strategy="join"
     )
     dropped = (
         pairs.select(
-            "id_b",
+            "vec_id_b",
             (
-                F.expr(_dot_expr("ea", "eb")) / (F.col("nrm_a") * F.col("nrm_b"))
+                F.expr(_dot_expr("embedding_a", "embedding_b"))
+                / (F.col("nrm_a") * F.col("nrm_b"))
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= _SEMDEDUP_TAU)
-        .select(F.col("id_b").alias("vec_id"))
+        .select(F.col("vec_id_b").alias("vec_id"))
         .distinct()
         .withColumn("is_dropped", F.lit(1))
     )
@@ -4973,16 +4859,8 @@ def _lsh_recall_from_bands(e: DataFrame, bands: DataFrame) -> DataFrame:
     ORACLE recomputes norms for the truth CTE (eval-harness cost)."""
     truth = _embedding_truth_pairs(e)
     cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
-        )
+        same_key_pairs(bands, ["band_id", "band_key"], "vec_id", strategy="join")
+        .select(F.col("vec_id_a").alias("id_a"), F.col("vec_id_b").alias("id_b"))
         .distinct()
         .withColumn("hit", F.lit(1))
     )
@@ -5251,13 +5129,11 @@ def dedup_embedding_cosine_projected(
     data-independent, like the coordinate axes)."""
     raw = load_table(spark, sf_dir, "embeddings")
     e = load_table_parallel(spark, sf_dir, "embeddings")
-    # The shared tail persists the occupancy-graded band rows (post
-    # window count), so the hashed-hyperplane fold — the heaviest map
-    # chain in this family, 4 x bits FMA folds per row — runs exactly
-    # once per run by lineage AND is warm for a catalog re-run (the
-    # r13 pre-tail persist this replaces measured 1.24 vs 1.38 s at
-    # sf0.1, tools/bench_ab_r13.py; the shared-tail form 0.659 -> 0.474
-    # min-of-2, bench_runs/r14/ab_cosine_band_persist.txt).
+    # The shared tail persists the band rows, so the hashed-hyperplane
+    # fold — 4 x bits FMA folds per row — is warm for a catalog re-run
+    # (pre-tail persist 1.24 vs 1.38 s at sf0.1, OPTIMIZATION_r13.md;
+    # shared-tail form 0.659 -> 0.474 s min-of-2,
+    # bench_runs/r14/ab_cosine_band_persist.txt).
     return _neardup_pairs_from_bands(raw, _proj_band_rows(e, raw))
 
 
@@ -5388,47 +5264,19 @@ def _winnowing_pair_frame(
         .select("doc_id", F.expr(_WINNOW_FPS).alias("fps"))
     )
     fp_rows = fps.select("doc_id", F.explode("fps").alias("fp"))
-    # r13 optimization (guide §2.4/§3): the old tail self-joined the
-    # kept index (krows a x krows b on fp) — TWO more shuffles (or a
-    # corpus-proportional broadcast) of the index plus a quadratic
-    # probe stage.  The DF cap already bounds every surviving bucket
-    # at df_cap docs, so the pairs can be generated MAP-SIDE from one
-    # per-fp sorted bucket array (<= C(cap, 2) pairs per bucket),
-    # and the collect_list buffer is bounded by the cap by
-    # construction (the filter runs BEFORE the collect).
-    # r14 (guide §2.4 shared exchange — the simhash/jaccard/dup_span
-    # treatment): the DF cap itself is a count() window over the SAME
-    # fp key the bucket groupBy shuffles on, so the fp stream crosses
-    # ONE exchange instead of two (groupBy-count + join-back) and the
-    # index-sized broadcast build is gone.  Same-JVM A/B won every
-    # pass (1.301 -> 1.108 s min, bench_runs/r14/ab_winnow_adamic_cds.txt).
-    buckets = (
-        fp_rows.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
-        )
-        .filter((F.col("df") >= 2) & (F.col("df") <= df_cap))
-        .groupBy("fp")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
-    )
+    # The DF cap is a count() window over the same fp key the pair
+    # fan-out groups on, so the fp stream crosses one exchange, and it
+    # bounds every surviving bucket at df_cap docs before the collect.
+    kept = fp_rows.withColumn(
+        "df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
+    ).filter((F.col("df") >= 2) & (F.col("df") <= df_cap))
     return (
-        buckets.select(F.explode(_bucket_pairs_expr("docs")).alias("p"))
+        same_key_pairs(kept, ["fp"], "doc_id", strategy="fanout", cap=df_cap)
         .groupBy(
-            F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b")
+            F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
-    )
-
-
-def _bucket_pairs_expr(docs: str) -> F.Column:
-    """All ordered pairs (doc_a < doc_b) of a SORTED id array, as one
-    map-side expression — the fan-out form of a capped-bucket
-    self-join.  Output size is C(size, 2), bounded by the caller's
-    bucket cap."""
-    return F.expr(
-        f"flatten(transform({docs}, (x, i) -> "
-        f"transform(slice({docs}, i + 2, size({docs}) - i - 1), "
-        f"y -> struct(x AS doc_a, y AS doc_b))))"
     )
 
 
@@ -5450,11 +5298,11 @@ def dedup_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-gram shingling.
 
     Spark-first scale shape: hashing and window-minima are one map-side
-    projection (higher-order functions, zero shuffle); the pair join
-    goes through an inverted fingerprint index with a document-
-    frequency cap (boilerplate fingerprints shared by > 20
-    docs are dropped BEFORE the self-join, the same quadratic-bucket
-    guard as ``dedup_ngram_jaccard``), so candidate pairs stay bounded
+    projection (higher-order functions, zero shuffle); pairs come from
+    an inverted fingerprint index with a document-frequency cap
+    (boilerplate fingerprints shared by > 20 docs are dropped BEFORE
+    pairing, the same quadratic-bucket guard as
+    ``dedup_ngram_jaccard``), so candidate pairs stay bounded
     by cap x index size — never all-pairs."""
     return _winnowing_pair_frame(spark, sf_dir)
 
@@ -5505,24 +5353,13 @@ def _winnowing_truth_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("g"),
     )
-    # Same capped-bucket fan-out as _winnowing_pair_frame: the DF cap
-    # bounds every surviving gram bucket, so pairs come from one
-    # sorted bucket array instead of a second self-join shuffle — and
-    # (r14) the cap is a count() window sharing the bucket groupBy's
-    # g exchange, not a groupBy-count joined back.
-    buckets = (
-        g31.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("g"))
-        )
-        .filter((F.col("df") >= 2) & (F.col("df") <= _WINNOW_DF_CAP))
-        .groupBy("g")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
-    )
+    # Same DF-capped fan-out as _winnowing_pair_frame.
+    kept = g31.withColumn(
+        "df", F.count(F.lit(1)).over(Window.partitionBy("g"))
+    ).filter((F.col("df") >= 2) & (F.col("df") <= _WINNOW_DF_CAP))
     return (
-        buckets.select(F.explode(_bucket_pairs_expr("docs")).alias("p"))
-        .select(
-            F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b")
-        )
+        same_key_pairs(kept, ["g"], "doc_id", strategy="fanout", cap=_WINNOW_DF_CAP)
+        .select(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
         .distinct()
     )
 
@@ -5778,7 +5615,7 @@ def semantic_decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # No pre-distinct repartition here (unlike
         # _neardup_pairs_from_bands): the train x eval candidate set is
-        # far smaller than the corpus self-join's, and the same-JVM A/B
+        # far smaller than the corpus-wide one, and the same-JVM A/B
         # measured a wash (bench_runs/r13opt/ab_scoped_repart.txt).
         .distinct()
     )
@@ -6370,50 +6207,20 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e"),
     ).select("doc_id", "ha", "hb", "e.b", "e.blk")
-    # r13 (guide §2.4 "two operations keyed the same way can share one
-    # exchange"): the bucket-size guard is a count() window over the
-    # SAME (b, blk) key the self-join below shuffles on — so krows ends
-    # at one exchange and both self-join sides read it via
-    # ReusedExchange.  The previous groupBy-aggregate + join-back form
-    # gave each side its own map-side lineage (scan + simhash fold +
-    # explode), so the persisted fingerprint chain was computed per
-    # side (stage trace: two 32-task map stages with identical shuffle
-    # writes, 12.8 s + 6.6 s task time); same-JVM alternating A/B won
-    # all six paired passes for this form (~0.2-0.4 s at sf0.1).
+    # The bucket-size guard is a count() window over the same (b, blk)
+    # key the pair join shuffles on, so krows ends at one exchange and
+    # both join sides read it via ReusedExchange.
     w = Window.partitionBy("b", "blk")
     krows = (
         blocks.withColumn("df", F.count(F.lit(1)).over(w))
         .filter((F.col("df") >= 2) & (F.col("df") <= _SIMHASH_BLOCK_CAP))
         .select("doc_id", "ha", "hb", "b", "blk")
     )
-    # Pair stage stays a bucket SELF-JOIN, not a collect_list fan-out:
-    # _SIMHASH_BLOCK_CAP is 1000, so a hot bucket's C(cap,2) ~ 500k
-    # pairs would materialize as ONE in-memory struct array per bucket
-    # row under the fan-out (an interpreted-HOF O(cap^2) copy chain and
-    # a per-task memory spike — guide §5), where the codegen'd join
-    # STREAMS the same pairs.  The fan-out is right for the small-cap
-    # buckets (triangle/adamic/winnowing, caps <= 64); wrong here.
-    # r14 re-check: the memory-bounded part-pair fan-out (the cosine
-    # treatment, T=64) was result-identity-verified and A/B'd too —
-    # slower on every pass (2.36 vs 1.70 s min,
-    # bench_runs/r14/ab_simhash_partpair.txt): the 16-bit block index
-    # keeps buckets small, so the fan-out adds HOF pair materialization
-    # without removing join cost.
     cand = (
-        krows.alias("a")
-        .join(
-            krows.alias("b"),
-            (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        same_key_pairs(krows, ["b", "blk"], "doc_id", payload=["ha", "hb"], strategy="join")
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.ha").alias("ha_a"),
-            F.col("a.hb").alias("hb_a"),
-            F.col("b.ha").alias("ha_b"),
-            F.col("b.hb").alias("hb_b"),
+            F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"),
+            "ha_a", "hb_a", "ha_b", "hb_b",
         )
         .distinct()
     )
