@@ -92,6 +92,35 @@ def _rows_multiset(cols, rows):
     return out
 
 
+def canonical_rows(pdf: pd.DataFrame) -> list[tuple]:
+    """The driver's canonical form of a result frame: one tuple of
+    ``_norm_cell`` strings per row, columns in name order, rows sorted.
+    Two frames hold the same result iff their canonical rows are equal
+    (row order ignored, duplicate rows counted, floats at full repr
+    precision)."""
+    return _rows_multiset(*_frame_rows(pdf))
+
+
+def frame_difference(
+    left: pd.DataFrame, right: pd.DataFrame, sides: tuple[str, str]
+) -> str | None:
+    """None when the two frames hold the same result by
+    ``canonical_rows``, else the first difference: the column names,
+    the row count, or the first differing sorted row, each side
+    labelled by its name in ``sides``."""
+    a, b = sides
+    l_cols, r_cols = sorted(left.columns), sorted(right.columns)
+    if l_cols != r_cols:
+        return f"column mismatch: {a}={l_cols} {b}={r_cols}"
+    if len(left) != len(right):
+        return f"row count mismatch: {a}={len(left)} {b}={len(right)}"
+    lm, rm = canonical_rows(left), canonical_rows(right)
+    for i, (x, y) in enumerate(zip(lm, rm)):
+        if x != y:
+            return f"value mismatch at sorted row {i}: {a}={x} {b}={y}"
+    return None
+
+
 @dataclass
 class OracleResult:
     name: str
@@ -104,8 +133,7 @@ class OracleResult:
 def check_query(
     spark: SparkSession, name: str, fn, sql: str, sf_dir: str
 ) -> OracleResult:
-    sdf = fn(spark, sf_dir)
-    s_cols, s_rows = _frame_rows(sdf.toPandas())
+    s_pdf = fn(spark, sf_dir).toPandas()
     # Queries that persist() an intermediate (corpus_dup_span_stats's
     # span stream) would otherwise accumulate cached blocks across the
     # 123-query suite; the result is already materialized here.
@@ -113,28 +141,9 @@ def check_query(
 
     con = duckdb_connection(sf_dir)
     try:
-        o_cols, o_rows = _frame_rows(con.execute(sql).df())
+        o_pdf = con.execute(sql).df()
     finally:
         con.close()
 
-    if sorted(s_cols) != sorted(o_cols):
-        return OracleResult(
-            name, False, len(s_rows), len(o_rows),
-            f"column mismatch: spark={sorted(s_cols)} oracle={sorted(o_cols)}",
-        )
-    if len(s_rows) != len(o_rows):
-        return OracleResult(
-            name, False, len(s_rows), len(o_rows),
-            f"row count mismatch: spark={len(s_rows)} oracle={len(o_rows)}",
-        )
-    sm = _rows_multiset(s_cols, s_rows)
-    om = _rows_multiset(o_cols, o_rows)
-    if sm != om:
-        diff = next(
-            (i for i, (a, b) in enumerate(zip(sm, om)) if a != b), None
-        )
-        detail = "value mismatch"
-        if diff is not None:
-            detail += f" at sorted row {diff}: spark={sm[diff]} oracle={om[diff]}"
-        return OracleResult(name, False, len(s_rows), len(o_rows), detail)
-    return OracleResult(name, True, len(s_rows), len(o_rows))
+    detail = frame_difference(s_pdf, o_pdf, ("spark", "oracle"))
+    return OracleResult(name, detail is None, len(s_pdf), len(o_pdf), detail or "")

@@ -602,7 +602,7 @@ def corpus_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hazard the round-4 judge flagged).  WindowExec buffers one span
     group at a time and spills, so a hot span degrades gracefully; at
     sf0.1 this form is ~2.8x faster cold than the persisting form
-    (tools/bench_variants.py, round 5).
+    (round-5 same-JVM shoot-out, commit ddb8ef5).
 
     r14 (guide §2.4): zero-span docs ride the SAME pass via
     ``explode_outer`` (one null row per empty span array) instead of a
@@ -3256,14 +3256,6 @@ def adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
     )
-    # The edges persist predates r14 (hot working set per storage.py
-    # policy, released by the harness clearCache per query) and stays:
-    # with the degree folded into the window below it has one consumer
-    # per run, but the distinct edge set is the expensive prefix
-    # (orders⋈lineitem + distinct) and re-running the query against a
-    # warm catalog skips it — measured 0.70 vs 1.01 s min-of-2 without
-    # it (bench_runs/r14/ab_winnow_adamic_cds.txt).
-    edges = persist_corpus(edges)
     w = Window.partitionBy("s").orderBy(
         F.md5(
             F.concat(F.col("s").cast("string"), F.lit(":"), F.col("c").cast("string"))

@@ -525,12 +525,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     2*sum(bit) > n_words (strict majority), which is what the final
     transform emits.
 
-    Round-5 form shoot-out (tools/bench_variants.py, sf0.1, in-session
-    A/B): this form 0.29s; r3 explode+groupBy 1.19s; packed-nibble
+    Round-5 form shoot-out (sf0.1, in-session A/B, commit 69d5c65):
+    this form 0.29s; r3 explode+groupBy 1.19s; packed-nibble
     16-bigint accumulator 2.2s; element_at(literal-array) lookup 2.8s.
     The 5.8x "regression" BENCH_r04 recorded was session-mode noise
     (same plan measures 0.29s-1.9s across fresh JVMs, pinned per
-    session — see BENCH_NOTES.md), not a plan change."""
+    session — README "Run-to-run variance (the round-5 bisect)"), not
+    a plan change."""
     out = _simhash_fp_frame(spark, sf_dir)
     return out.select(
         "doc_id", "simhash64", F.substring("simhash64", 1, 16).alias("band16")
@@ -1231,15 +1232,9 @@ def _neardup_pairs_from_bands(e: DataFrame, bands: DataFrame) -> DataFrame:
     and hash partitioning on (id_a, id_b) satisfies the distinct's
     distribution, so this is still exactly ONE exchange."""
     par = e.sparkSession.sparkContext.defaultParallelism
-    # Persist the band rows (bands x 1 narrow row per vector; DISK_ONLY
-    # per storage.py policy, released by the harness clearCache per
-    # query): the band fold is the heaviest map chain in this family
-    # (4 x bits FMA folds per row for the projected variant), and a
-    # warm catalog re-run reads the rows instead of re-folding
-    # (bench_runs/r14/ab_cosine_band_persist.txt).
     cand = (
         same_key_pairs(
-            persist_corpus(bands), ["band_id", "band_key"], "vec_id",
+            bands, ["band_id", "band_key"], "vec_id",
             payload=["nrm"], strategy="fanout",
         )
         .select(
@@ -3989,7 +3984,7 @@ def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     single ratio division, so cross-engine parity is trivial rather
     than delicate.
 
-    Scale shape (round-7 rewrite, tools/bench_variants.py shoot-out:
+    Scale shape (round-7 rewrite, commit fb5e93c, same-JVM shoot-out:
     1.02s -> 0.41s at sf0.1, value diff 0): because bucket and sign
     depend only on the KEY's hash, each cell counter equals
     sum over keys of f * sign — so the sketch is DERIVED from the

@@ -1,5 +1,13 @@
 """Storage-level policy for persisted intermediates.
 
+The rule: persist a relation only when one run reads it more than
+once — through a loop, through several actions, or through plan
+branches that AQE cannot serve from one exchange (ReuseExchange
+already shares identical subtrees within a plan).  A warm re-run of
+the same query is not a reason: harnesses clear the cache after each
+query, so a relation read once per run is only a write and a
+read-back.
+
 Two classes of persist in this engine, chosen per call site:
 
 - HOT WORKING SET — plain ``.persist()`` (MEMORY_AND_DISK): bounded or
@@ -37,15 +45,11 @@ vs MEMORY_AND_DISK 3.25/1.64/1.20/0.59s — equivalent within this
 container's session noise (the OS page cache absorbs the re-read), so
 the scale-safe level costs nothing locally.
 
-Round-8 follow-up (tools/bench_persist_ab.py, EXACT bench-harness form:
-sf0.001 noop warmup, fresh DataFrame per run, clearCache between
-queries, min-of-2, levels alternated over 2 passes at sf0.1):
-triangle_count_cosupplier DISK_ONLY 0.999s vs MEMORY_AND_DISK 0.924s
-(first-ever DISK_ONLY pass 1.694s — one-time local-dir/JIT cost, not
-steady state); serving_article_citations 0.641 vs 0.684s (no
-persist_corpus on its path — pure session noise either way).  The r7
-bench readings (1.55s / 0.78s) were session noise, not a level
-regression; DISK_ONLY stays the default.
+In bench form (sf0.001 warm-up, a fresh DataFrame per run, the cache
+cleared between queries) the level costs nothing either:
+triangle_count_cosupplier 0.999 s DISK_ONLY vs 0.924 s MEMORY_AND_DISK
+warm, so DISK_ONLY stays the default (commit 7f15eaf; README
+"Benchmarks", round 8).
 """
 
 from __future__ import annotations
