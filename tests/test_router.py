@@ -64,6 +64,25 @@ def test_citations_route_matches_serving_function(router, warehouse):  # noqa: F
     }
 
 
+def test_citations_page_without_revisions_404(router):
+    # Page 300 has no references, hence no revision rows.
+    r = router.dispatch("GET", "/api/v1/article/300/citations")
+    assert r.status == 404
+    assert r.error["error"] == "No revisions found for this article"
+    assert router.dispatch("GET", "/api/v1/article/999999/citations").status == 404
+
+
+def test_citations_unknown_page_with_revision_id_is_empty_200(router):
+    # An explicit revision_id skips the 404 (reference:api_v1.py:153-170).
+    for raw in ("false", "true"):
+        r = router.dispatch(
+            "GET", "/api/v1/article/999999/citations",
+            {"revision_id": "1002", "raw": raw},
+        )
+        assert r.status == 200
+        assert r.df.collect() == []
+
+
 def test_citation_404_and_200(router):
     assert router.dispatch("GET", "/api/v1/citation/deadbeef").status == 404
     sha = get_sha1(normalize_wikitext(REF_A))

@@ -90,6 +90,35 @@ def test_citation_detail(warehouse):
     assert dict(tpl.parameters) == {"url": "http://c.example/page", "title": "C"}
 
 
+def test_citation_cards_one_row_per_normalized_citation(warehouse):
+    cards = warehouse["citation_cards"]
+    ids = [r.normalized_id for r in cards.select("normalized_id").collect()]
+    want = [r.id for r in warehouse["normalized_citations"].select("id").collect()]
+    assert len(ids) == len(set(ids))
+    assert sorted(ids) == sorted(want)
+
+
+@pytest.mark.parametrize(
+    "ref,page_id,revision_id",
+    [(REF_A, 100, 1002), (REF_B, 100, 1002), (REF_C, 200, 2001)],
+    ids=["REF_A", "REF_B", "REF_C"],
+)
+def test_citation_detail_hydration_equals_flagship(warehouse, ref, page_id, revision_id):
+    """The card route and the flagship hydrate one citation identically:
+    both read the same citation_cards row."""
+    sha = get_sha1(normalize_wikitext(ref))
+    (flagship,) = [
+        r for r in serving.article_citations(
+            warehouse, page_id, revision_id=revision_id).collect()
+        if r.normalized_sha1 == sha
+    ]
+    (detail,) = serving.citation_detail(warehouse, sha).collect()
+    assert detail.reference_normalized == flagship.reference_normalized
+    assert detail.appears_on_articles == flagship.other_articles
+    assert detail.extracted_links == flagship.extracted_links
+    assert detail.templates == flagship.templates
+
+
 def test_template_report(warehouse):
     tpl = {r.name: r for r in warehouse["wiki_templates"].collect()}
     rows = serving.template_report(

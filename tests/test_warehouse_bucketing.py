@@ -130,9 +130,10 @@ def test_flagship_plans_zero_instance_exchange_over_bucketed(warehouses):
     """The FLAGSHIP serving query end-to-end (article_citations — the
     path behind wiki_citations_at_revision and the WSGI shell) over the
     bucketed-catalog warehouse plans its history work with ZERO
-    Exchange on the instance key: the lifecycle aggregation
-    (groupBy citation_instance_id) and the history⋈instance join ride
-    the bucket distribution straight through the broadcast semi-joins.
+    Exchange on the instance key: the one lifecycle aggregation
+    (groupBy citation_instance_id, with the target/next presence flags
+    folded in) runs over the bucketed history scan joined only to the
+    page's broadcast revisions, so it keeps the bucket distribution.
     The same query over a plain (unbucketed) warehouse DOES shuffle on
     that key — pinning that the assertion discriminates, not that the
     plan happens to be small."""
@@ -145,6 +146,26 @@ def test_flagship_plans_zero_instance_exchange_over_bucketed(warehouses):
 
     want = serving.article_citations(plain, 100, revision_id=1002)
     assert shuffle_marker in _executed_plan(want)
+
+
+def test_flagship_hydration_reads_citation_cards(warehouses):
+    """Normalized-mode hydration is one join to the prebuilt
+    citation_cards table: no per-request collect_list aggregation and
+    no shuffle on the normalized id."""
+    _, bucketed = warehouses
+    plan = _executed_plan(serving.article_citations(bucketed, 100, revision_id=1002))
+    assert "hashpartitioning(normalized_id" not in plan, plan
+    assert "collect_list" not in plan, plan
+
+
+def test_citation_detail_is_exchange_free(warehouses):
+    """The citation card route is a filtered scan of citation_cards."""
+    _, bucketed = warehouses
+    sha1 = bucketed["citation_cards"].select("normalized_sha1").first()[0]
+    df = serving.citation_detail(bucketed, sha1)
+    plan = _executed_plan(df)
+    assert "Exchange" not in plan, plan
+    assert df.count() == 1
 
 
 def test_unbucketed_read_of_bucketed_files_still_works(warehouses, spark, tmp_path):

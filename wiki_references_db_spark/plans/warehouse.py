@@ -15,6 +15,14 @@ Replaces the reference's FK-ordered PostgreSQL load
 
 Table shapes follow reference:models.py:18-572 (minus the Postgres-only
 columns); `id` columns are BIGINT.
+
+One derived table rides along: ``citation_cards``, one row per
+``normalized_citations.id`` with the citation's hydrated child
+collections (other articles, extracted links, templates with their
+parameters).  It is a pure function of the other tables, built from
+the same build's outputs and rebuilt with them — never updated
+incrementally — so the two hydrating serving routes read it instead of
+re-aggregating the child tables on every request.
 """
 
 from __future__ import annotations
@@ -127,7 +135,7 @@ def build_warehouse(staging: dict[str, DataFrame]) -> dict[str, DataFrame]:
         "parameter_value",
     )
 
-    return {
+    warehouse = {
         "containers": containers,
         "domains": domains,
         "documents": documents,
@@ -140,6 +148,119 @@ def build_warehouse(staging: dict[str, DataFrame]) -> dict[str, DataFrame]:
         "wiki_templates": wiki_templates,
         "template_data": template_data,
     }
+    warehouse["citation_cards"] = citation_cards(warehouse)
+    return warehouse
+
+
+def _sort_template_structs(arr):
+    """array_sort with an explicit comparator: the template structs carry
+    a MAP field, which Spark's default struct ordering cannot compare."""
+
+    def cmp(left, right):
+        def by(field):
+            return (
+                F.when(left[field] < right[field], -1)
+                .when(left[field] > right[field], 1)
+                .otherwise(0)
+            )
+
+        return (
+            F.when(by("offset_start") != 0, by("offset_start"))
+            .when(by("template_name") != 0, by("template_name"))
+            .otherwise(by("wiki_template_id"))
+        )
+
+    return F.array_sort(arr, cmp)
+
+
+def citation_cards(w: dict[str, DataFrame]) -> DataFrame:
+    """One row per ``normalized_citations.id``: the normalized text plus
+    its hydrated child collections (J8 + A7, reference:api_v1.py:145-441)
+    — ``other_articles`` (page + document of the article it appears on),
+    ``extracted_links`` (url + web_resource_id) and ``templates``
+    (offset, name, id, parameter map).  Every array has a deterministic
+    order via array_sort on its leading struct fields; a citation
+    without children carries NULL, not an empty array (left joins)."""
+    nc = w["normalized_citations"]
+    other_articles = (
+        nc.join(
+            w["documents"].select(F.col("id").alias("appears_on_article"),
+                                  F.col("page_id").alias("oa_page_id")),
+            "appears_on_article",
+            "left",
+        )
+        .groupBy(F.col("id").alias("normalized_id"))
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        F.col("oa_page_id").alias("page_id"),
+                        F.col("appears_on_article").alias("document_id"),
+                    )
+                )
+            ).alias("other_articles")
+        )
+    )
+
+    links = (
+        w["ncwr"]
+        .join(
+            w["web_resources"].select(
+                F.col("id").alias("web_resource_id"), "url"
+            ),
+            "web_resource_id",
+        )
+        .groupBy("normalized_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("url"), F.col("web_resource_id")))
+            ).alias("extracted_links")
+        )
+    )
+
+    tpl = (
+        w["template_data"]
+        .join(
+            w["wiki_templates"].select(
+                F.col("id").alias("wiki_template_id"), F.col("name")
+            ),
+            "wiki_template_id",
+        )
+        .groupBy("normalized_id", "wiki_template_id", "name", "offset_start")
+        .agg(
+            F.map_from_entries(
+                F.array_sort(
+                    F.collect_list(
+                        F.struct(F.col("parameter_key"), F.col("parameter_value"))
+                    )
+                )
+            ).alias("parameters")
+        )
+        .groupBy("normalized_id")
+        .agg(
+            _sort_template_structs(
+                F.collect_list(
+                    F.struct(
+                        F.col("offset_start"),
+                        F.col("name").alias("template_name"),
+                        F.col("wiki_template_id"),
+                        F.col("parameters"),
+                    )
+                )
+            ).alias("templates")
+        )
+    )
+
+    return (
+        nc.select(
+            F.col("id").alias("normalized_id"),
+            "normalized_sha1",
+            "reference_normalized",
+        )
+        .join(other_articles, "normalized_id", "left")
+        .join(links, "normalized_id", "left")
+        .join(tpl, "normalized_id", "left")
+    )
 
 
 def orphan_stats(staging: dict[str, DataFrame]) -> dict[str, int]:
@@ -204,7 +325,12 @@ def write_warehouse(
     Catalyst plans instance-keyed fact-fact joins and aggregations with
     zero Exchange (tests/test_warehouse_bucketing.py pins the plan).
     The files are still plain zstd parquet — a reader without the
-    catalog entry sees an ordinary parquet directory."""
+    catalog entry sees an ordinary parquet directory.
+
+    ``citation_cards`` is written like the other dimension tables, as
+    plain zstd parquet.  It is derived from the other tables of the
+    same ``warehouse`` dict, so writing them together keeps it
+    consistent; there is no incremental update of it."""
     from wiki_references_db_spark.plans.bucketing import write_bucketed
 
     for name, df in warehouse.items():

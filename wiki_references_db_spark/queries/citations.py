@@ -459,14 +459,12 @@ TYPE_LABELS = {0: "other", 1: "inline", 2: "endnote"}
 
 def type_label(c: Column) -> Column:
     """reference_type presentation mapping (F11, reference:api_v1.py:14)."""
-    out = F.lit(None).cast("string")
-    expr = (
+    return (
         F.when(c == 0, "other")
         .when(c == 1, "inline")
         .when(c == 2, "endnote")
         .otherwise(c.cast("string"))
     )
-    return expr if out is not None else expr
 
 
 def citations_at_revision(

@@ -19,39 +19,22 @@ Endpoint map (reference:api_v1.py / explorer.py):
 
 Request parameters arrive as Python literals (they come from an HTTP
 layer); Catalyst folds them into pushed-down predicates.  Hydration is
-join + ``collect_list(struct(...))`` — the set-oriented form of the
-reference's batched IN-lists + Python-side grouping (J8, the N+1
-avoidance noted at reference:explorer.py:155-160).
+read, not computed: the warehouse's ``citation_cards`` table
+(plans/warehouse.py) holds every normalized citation's collected
+links, templates and other articles, built once with the warehouse —
+the set-oriented form of the reference's batched IN-lists +
+Python-side grouping (J8, the N+1 avoidance noted at
+reference:explorer.py:155-160).  A request joins or filters it; no
+request aggregates a child table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wiki_references_db_spark.operators.relational import paginate
 from wiki_references_db_spark.queries.citations import type_label
-
-
-def _sort_template_structs(arr):
-    """array_sort with an explicit comparator: the template structs carry
-    a MAP field, which Spark's default struct ordering cannot compare."""
-
-    def cmp(left, right):
-        def by(field):
-            return (
-                F.when(left[field] < right[field], -1)
-                .when(left[field] > right[field], 1)
-                .otherwise(0)
-            )
-
-        return (
-            F.when(by("offset_start") != 0, by("offset_start"))
-            .when(by("template_name") != 0, by("template_name"))
-            .otherwise(by("wiki_template_id"))
-        )
-
-    return F.array_sort(arr, cmp)
 
 
 def article_revisions(w: dict[str, DataFrame], page_id: int, limit: int = 100,
@@ -73,15 +56,16 @@ def article_revisions(w: dict[str, DataFrame], page_id: int, limit: int = 100,
     )
 
 
-def _resolve_revision(w: dict[str, DataFrame], page_id: int,
-                      revision_id: int | None) -> dict:
+def resolve_revision(w: dict[str, DataFrame], page_id: int,
+                     revision_id: int | None) -> dict:
     """Resolve the flagship's scalar params (target/latest/next revision
     ids) with ONE tiny aggregation over the page's revisions — the
     reference's own resolve-then-query serving shape
     (reference:api_v1.py:153-170).  The 1-row collect keeps every
     scalar-subquery subtree (and its repeated broadcast jobs) out of the
     main plan, whose page/revision predicates then push into the
-    parquet scans as literals."""
+    parquet scans as literals.  ``latest_revision_id`` is None when the
+    page has no revisions."""
     rev = w["revisions"].filter(F.col("page_id") == page_id)
     row = rev.groupBy().agg(
         F.max("revision_id").alias("latest"),
@@ -108,193 +92,77 @@ def article_citations(
     raw: bool = False,
     limit: int = 100,
     offset: int = 0,
+    resolved: dict | None = None,
 ) -> DataFrame:
     """The flagship (reference:api_v1.py:145-364): citations visible at a
     revision with lifecycle stats, currently_visible, removed_at, and —
-    in normalized mode — hydrated links / templates / other-articles."""
-    p = _resolve_revision(w, page_id, revision_id)
+    in normalized mode — the hydrated links / templates / other-articles
+    of their ``citation_cards`` row.  ``resolved`` is the
+    :func:`resolve_revision` result for the same page and revision, for
+    a caller that already ran it.
+
+    The lifecycle is ONE ``groupBy(citation_instance_id)`` over the
+    page's instance history: first/last seen, appearance count, and two
+    presence flags — at the target revision (which instances are
+    visible) and at the next revision (``removed_at``).  The history is
+    joined to the page's revisions only: instance ids hash the page id,
+    so a page's instances appear in no other page's revisions.  Over
+    the bucketed history table the aggregation plans with no
+    Exchange."""
+    p = resolved or resolve_revision(w, page_id, revision_id)
     target, latest, nxt = (
         p["target_revision_id"],
         p["latest_revision_id"],
         p["next_revision_id"],
     )
+    rev = w["revisions"].filter(F.col("page_id") == page_id)
+    stats = (
+        w["citation_histories"]
+        .join(F.broadcast(rev.select("revision_id", "revision_timestamp")),
+              "revision_id")
+        .groupBy("citation_instance_id")
+        .agg(
+            F.min("revision_timestamp").alias("first_seen_ts"),
+            F.max("revision_timestamp").alias("last_seen_ts"),
+            F.min("revision_id").alias("first_seen_id"),
+            F.max("revision_id").alias("last_seen_id"),
+            F.count("revision_id").alias("appearance_count"),
+            F.max(F.col("revision_id") == F.lit(target).cast("long")).alias("__at_target"),
+            F.max(F.col("revision_id") == F.lit(nxt).cast("long")).alias("__at_next"),
+        )
+        .filter(F.col("__at_target"))
+    )
     ci = w["citation_instances"].filter(F.col("page_id") == page_id)
-    ch = w["citation_histories"]
-    rev = w["revisions"]
+    base = stats.join(F.broadcast(ci), stats.citation_instance_id == ci.id)
 
-    present = ch.filter(
-        F.col("revision_id") == F.lit(target).cast("long")
-    ).select("citation_instance_id")
-    visible = ci.join(
-        F.broadcast(present.withColumnRenamed("citation_instance_id", "id")),
-        "id",
-        "left_semi",
-    )
-
-    hist = ch.join(F.broadcast(visible.select(F.col("id").alias("citation_instance_id"))),
-                   "citation_instance_id", "left_semi").join(
-        rev.select("revision_id", "revision_timestamp"), "revision_id"
-    )
-    stats = hist.groupBy("citation_instance_id").agg(
-        F.min("revision_timestamp").alias("first_seen_ts"),
-        F.max("revision_timestamp").alias("last_seen_ts"),
-        F.min("revision_id").alias("first_seen_id"),
-        F.max("revision_id").alias("last_seen_id"),
-        F.count("revision_id").alias("appearance_count"),
-    )
-
-    if nxt is not None:
-        present_next = ch.filter(F.col("revision_id") == F.lit(nxt)).select(
-            "citation_instance_id", F.lit(1).alias("__in_next")
-        )
-    else:
-        present_next = ch.filter(F.lit(False)).select(
-            "citation_instance_id", F.lit(1).alias("__in_next")
-        )
-    removed_at = (
-        F.when(F.col("__in_next").isNull(), F.lit(nxt).cast("long"))
-        if nxt is not None
-        else F.lit(None).cast("long")
-    )
-
-    base = (
-        visible.join(F.broadcast(stats), visible.id == stats.citation_instance_id)
-        .join(
-            F.broadcast(present_next.withColumnRenamed("citation_instance_id", "id")),
-            "id",
-            "left",
-        )
-        .withColumn(
-            "currently_visible",
-            F.col("last_seen_id") == F.lit(latest).cast("long"),
-        )
-        .withColumn("removed_at_revision_id", removed_at)
-    )
-
+    lifecycle = [
+        "reference_name",
+        "first_seen_id",
+        "first_seen_ts",
+        "last_seen_id",
+        "last_seen_ts",
+        "appearance_count",
+        (F.col("last_seen_id") == F.lit(latest).cast("long")).alias("currently_visible"),
+    ]
+    instance_id = F.col("id").alias("citation_instance_id")
+    label = type_label(F.col("reference_type")).alias("reference_type")
     if raw:
-        out = base.select(
-            F.col("id").alias("citation_instance_id"),
-            "raw_sha1",
-            type_label(F.col("reference_type")).alias("reference_type"),
-            "reference_name",
-            "first_seen_id",
-            "first_seen_ts",
-            "last_seen_id",
-            "last_seen_ts",
-            "appearance_count",
-            "currently_visible",
-        )
-        return paginate(
-            out,
-            [F.col("last_seen_ts").desc(), F.col("citation_instance_id").asc()],
-            limit=limit,
-            offset=offset,
-        )
-
-    nc = w["normalized_citations"]
-    joined = base.join(
-        nc.select(
-            F.col("id").alias("normalized_id"),
+        out = base.select(instance_id, "raw_sha1", label, *lifecycle)
+    else:
+        # removed_at is NULL when the instance is still there at the next
+        # revision, and when there is no next revision (flag NULL).
+        removed_at = F.when(~F.col("__at_next"), F.lit(nxt).cast("long"))
+        out = F.broadcast(base).join(w["citation_cards"], "normalized_id").select(
+            instance_id,
             "normalized_sha1",
             "reference_normalized",
-        ),
-        "normalized_id",
-    )
-
-    # Hydration (J8 + A7) — all grouped child collections, deterministic
-    # intra-array order via array_sort on leading struct fields.
-    docs = w["documents"]
-    other_articles = (
-        nc.join(
-            docs.select(F.col("id").alias("appears_on_article"),
-                        F.col("page_id").alias("oa_page_id")),
-            "appears_on_article",
-            "left",
-        )
-        .groupBy(F.col("id").alias("normalized_id"))
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("oa_page_id").alias("page_id"),
-                        F.col("appears_on_article").alias("document_id"),
-                    )
-                )
-            ).alias("other_articles")
-        )
-    )
-
-    links = (
-        w["ncwr"]
-        .join(
-            w["web_resources"].select(
-                F.col("id").alias("web_resource_id"), "url"
-            ),
-            "web_resource_id",
-        )
-        .groupBy("normalized_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("url"), F.col("web_resource_id")))
-            ).alias("extracted_links")
-        )
-    )
-
-    tpl = (
-        w["template_data"]
-        .join(
-            w["wiki_templates"].select(
-                F.col("id").alias("wiki_template_id"), F.col("name")
-            ),
-            "wiki_template_id",
-        )
-        .groupBy("normalized_id", "wiki_template_id", "name", "offset_start")
-        .agg(
-            F.map_from_entries(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("parameter_key"), F.col("parameter_value"))
-                    )
-                )
-            ).alias("parameters")
-        )
-        .groupBy("normalized_id")
-        .agg(
-            _sort_template_structs(
-                F.collect_list(
-                    F.struct(
-                        F.col("offset_start"),
-                        F.col("name").alias("template_name"),
-                        F.col("wiki_template_id"),
-                        F.col("parameters"),
-                    )
-                )
-            ).alias("templates")
-        )
-    )
-
-    out = (
-        joined.join(other_articles, "normalized_id", "left")
-        .join(links, "normalized_id", "left")
-        .join(tpl, "normalized_id", "left")
-        .select(
-            F.col("id").alias("citation_instance_id"),
-            "normalized_sha1",
-            "reference_normalized",
-            type_label(F.col("reference_type")).alias("reference_type"),
-            "reference_name",
-            "first_seen_id",
-            "first_seen_ts",
-            "last_seen_id",
-            "last_seen_ts",
-            "appearance_count",
-            "currently_visible",
-            "removed_at_revision_id",
+            label,
+            *lifecycle,
+            removed_at.alias("removed_at_revision_id"),
             "other_articles",
             "extracted_links",
             "templates",
         )
-    )
     return paginate(
         out,
         [F.col("last_seen_ts").desc(), F.col("citation_instance_id").asc()],
@@ -325,80 +193,13 @@ def citation_history(
 
 
 def citation_detail(w: dict[str, DataFrame], normalized_sha1: str) -> DataFrame:
-    """Citation card (reference:api_v1.py:367-441): normalized text +
-    hydrated articles/links/templates as collected arrays, 1 row."""
-    nc = w["normalized_citations"].filter(F.col("normalized_sha1") == normalized_sha1)
-    nc_ids = F.broadcast(nc.select(F.col("id").alias("normalized_id")))
-
-    articles = (
-        nc.join(
-            w["documents"].select(
-                F.col("id").alias("appears_on_article"),
-                F.col("page_id").alias("oa_page_id"),
-            ),
-            "appears_on_article",
-            "left",
-        )
-        .groupBy(F.col("id").alias("normalized_id"))
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("oa_page_id").alias("page_id"),
-                        F.col("appears_on_article").alias("document_id"),
-                    )
-                )
-            ).alias("appears_on_articles")
-        )
-    )
-    links = (
-        w["ncwr"].join(nc_ids, "normalized_id")
-        .join(
-            w["web_resources"].select(F.col("id").alias("web_resource_id"), "url"),
-            "web_resource_id",
-        )
-        .groupBy("normalized_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("url", "web_resource_id"))
-            ).alias("extracted_links")
-        )
-    )
-    tpls = (
-        w["template_data"].join(nc_ids, "normalized_id")
-        .join(
-            w["wiki_templates"].select(F.col("id").alias("wiki_template_id"), "name"),
-            "wiki_template_id",
-        )
-        .groupBy("normalized_id", "wiki_template_id", "name", "offset_start")
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("parameter_key", "parameter_value")))
-            ).alias("parameters")
-        )
-        .groupBy("normalized_id")
-        .agg(
-            _sort_template_structs(
-                F.collect_list(
-                    F.struct(
-                        "offset_start",
-                        F.col("name").alias("template_name"),
-                        "wiki_template_id",
-                        "parameters",
-                    )
-                )
-            ).alias("templates")
-        )
-    )
+    """Citation card (reference:api_v1.py:367-441): the citation's
+    ``citation_cards`` row — normalized text + hydrated
+    articles/links/templates as collected arrays, 1 row."""
     return (
-        nc.select(
-            F.col("id").alias("normalized_id"),
-            "normalized_sha1",
-            "reference_normalized",
-        )
-        .join(articles, "normalized_id", "left")
-        .join(links, "normalized_id", "left")
-        .join(tpls, "normalized_id", "left")
+        w["citation_cards"]
+        .filter(F.col("normalized_sha1") == normalized_sha1)
+        .withColumnRenamed("other_articles", "appears_on_articles")
     )
 
 

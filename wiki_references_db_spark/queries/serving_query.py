@@ -125,12 +125,12 @@ def derive_warehouse_for_page(
     citation_histories = lines.select(
         _ci_id().alias("citation_instance_id"), "revision_id"
     ).distinct()
-    # r13 optimization (guide §5 caching / §2.4): the endpoint consumes
-    # citation_histories three times (present, lifecycle hist,
-    # present_next); persist the page-sliced frames so each consumer
-    # reads one page's cached rows instead of re-running the
-    # lineitem-scan ⋈ broadcast + md5 + distinct chain (hot working
-    # set, storage.py policy; released by the per-query clearCache()).
+    # Persist the page-sliced frames (hot working set, storage.py
+    # policy; released by the per-query clearCache()): the endpoint
+    # reads the page's revisions twice (revision resolution, then the
+    # lifecycle aggregation), and a cached frame spares each later read
+    # the lineitem-scan ⋈ broadcast + md5 + distinct chain
+    # (citation_histories and citation_instances are read once each).
     # A long-running caller without that clearCache contract (e.g. a
     # per-request WSGI handler) must pass persist=False or unpersist
     # the frames itself — cache entries otherwise accumulate per page.
@@ -209,8 +209,9 @@ _WAREHOUSE_CTES = (
 def serving_article_citations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GET /article/<id>/citations?raw=1 (reference:api_v1.py:145-282)
     run through the ACTUAL serving endpoint function against
-    warehouse-shaped tables — semi-join presence, lifecycle stats,
-    currently_visible, and the endpoint's last_seen-desc pagination."""
+    warehouse-shaped tables — presence at the target revision and
+    lifecycle stats from one per-instance aggregation, currently_visible,
+    and the endpoint's last_seen-desc pagination."""
     p = resolve_target_params(spark, sf_dir)
     wh = derive_warehouse_for_page(spark, sf_dir, p["page_id"])
     return article_citations(

@@ -61,7 +61,8 @@ class ServingRouter:
 
     The only driver-side data access is the reference's own
     resolve-then-query shape: 1-row existence probes for point
-    entities (404 semantics) — never result-set materialization.
+    entities, and the flagship's 1-row revision resolution (404
+    semantics) — never result-set materialization.
     """
 
     ROUTES = [
@@ -122,14 +123,11 @@ class ServingRouter:
         raw = str(params.get("raw", "false")).lower() == "true"
         revision_id = _int_arg(params, "revision_id", None)
         page_id = int(m["page_id"])
-        if revision_id is None:
-            probe = (
-                self.w["revisions"]
-                .filter(F.col("page_id") == page_id)
-                .take(1)
-            )
-            if not probe:
-                return _err("No revisions found for this article", 404)
+        # The flagship's own revision resolution doubles as the 404
+        # probe: no latest revision means the page has no revisions.
+        resolved = serving.resolve_revision(self.w, page_id, revision_id)
+        if revision_id is None and resolved["latest_revision_id"] is None:
+            return _err("No revisions found for this article", 404)
         return Result(
             200,
             serving.article_citations(
@@ -139,6 +137,7 @@ class ServingRouter:
                 raw=raw,
                 limit=limit,
                 offset=offset,
+                resolved=resolved,
             ),
         )
 
