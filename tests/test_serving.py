@@ -1,26 +1,30 @@
 """Serving-layer endpoint functions over the fixture warehouse."""
 
 import os
+from collections import Counter
 
 import pytest
 
 from wiki_references_db_spark.functions.wikitext import get_sha1, normalize_wikitext
 from wiki_references_db_spark.plans.dedup_tables import dedup_staging
 from wiki_references_db_spark.plans.stage import stage_revisions
-from wiki_references_db_spark.plans.warehouse import build_warehouse
+from wiki_references_db_spark.plans.warehouse import build_warehouse, revision_cards
 from wiki_references_db_spark.queries import serving
 from wiki_references_db_spark.sources.mwrev import read_mwrev_bundles, write_mwrev_zst
-from tests.test_wiki_pipeline import FIXTURE, REF_A, REF_B, REF_C
+from tests.test_wiki_pipeline import FIXTURE, REF_A, REF_B, REF_C, _rev
 
 
-@pytest.fixture(scope="module")
-def warehouse(spark, tmp_path_factory):
-    bundle_dir = tmp_path_factory.mktemp("bundles_srv")
-    write_mwrev_zst(os.path.join(bundle_dir, "fixture-00.mwrev.zst"), FIXTURE)
+def _build(spark, bundle_dir, revisions):
+    write_mwrev_zst(os.path.join(bundle_dir, "fixture-00.mwrev.zst"), revisions)
     raw = read_mwrev_bundles(spark, str(bundle_dir))
     deduped = dedup_staging(stage_revisions(raw, domain="en.wikipedia.org"))
     w = build_warehouse(deduped)
     return {k: v.localCheckpoint() for k, v in w.items()}
+
+
+@pytest.fixture(scope="module")
+def warehouse(spark, tmp_path_factory):
+    return _build(spark, tmp_path_factory.mktemp("bundles_srv"), FIXTURE)
 
 
 def test_article_revisions_counts(warehouse):
@@ -78,6 +82,22 @@ def test_citation_history_cross_page(warehouse):
     assert len(page_filtered) == 4
 
 
+def test_citation_history_keeps_one_row_per_instance(spark, tmp_path):
+    """Two formattings of one citation in one revision are two instances
+    of one normalized citation: the history lists that revision twice."""
+    d1 = "{{cite web |url=http://d.example/p |title=D}}"
+    d2 = "{{cite web|url=http://d.example/p|title=D}}"
+    assert normalize_wikitext(d1) == normalize_wikitext(d2)
+    w = _build(spark, tmp_path, [
+        _rev(400, 4001, None, 1, f"Both {d1} and {d2} here."),
+        _rev(400, 4002, 4001, 2, f"Only {d1} now."),
+    ])
+    rows = serving.citation_history(w, get_sha1(normalize_wikitext(d1))).collect()
+    assert [(r.revision_id, r.page_id) for r in rows] == [
+        (4001, 400), (4001, 400), (4002, 400)
+    ]
+
+
 def test_citation_detail(warehouse):
     c_sha = get_sha1(normalize_wikitext(REF_C))
     row = serving.citation_detail(warehouse, c_sha).collect()
@@ -96,6 +116,39 @@ def test_citation_cards_one_row_per_normalized_citation(warehouse):
     want = [r.id for r in warehouse["normalized_citations"].select("id").collect()]
     assert len(ids) == len(set(ids))
     assert sorted(ids) == sorted(want)
+
+
+def test_revision_cards_count_history_rows(warehouse, spark):
+    """One row per revision; citation_count is the plain count of the
+    revision's history rows, 0 for a revision without any.  Revision
+    3001 has no references, so staging leaves it out of ``revisions``;
+    it is added back to give the build a zero-citation revision."""
+    revisions = warehouse["revisions"].unionByName(
+        spark.createDataFrame([(3001, 300, None, "2020-01-01 00:00:00")],
+                              warehouse["revisions"].schema)
+    )
+    w = dict(warehouse, revisions=revisions)
+    cards = revision_cards(w).collect()
+    want = Counter(r.revision_id for r in w["citation_histories"].collect())
+    ids = [r.revision_id for r in revisions.collect()]
+    assert sorted(r.revision_id for r in cards) == sorted(ids)
+    assert {r.revision_id: r.citation_count for r in cards} == {
+        rid: want.get(rid, 0) for rid in ids
+    }
+    assert [r.citation_count for r in cards if r.revision_id == 3001] == [0]
+    built = [r.revision_id for r in warehouse["revision_cards"].collect()]
+    assert sorted(built) == sorted(r.revision_id for r in warehouse["revisions"].collect())
+
+
+def test_web_resource_cards_one_row_per_web_resource(warehouse):
+    cards = warehouse["web_resource_cards"].collect()
+    ids = [r.web_resource_id for r in cards]
+    want = [r.id for r in warehouse["web_resources"].select("id").collect()]
+    assert len(ids) == len(set(ids))
+    assert sorted(ids) == sorted(want)
+    referenced = {r.web_resource_id for r in warehouse["ncwr"].collect()}
+    for r in cards:
+        assert (r.referenced_by is None) == (r.web_resource_id not in referenced)
 
 
 @pytest.mark.parametrize(

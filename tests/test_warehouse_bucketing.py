@@ -5,6 +5,7 @@ with ZERO Exchange on the bucketed side — the write pays the 28.8B-row
 shuffle once instead of every serving query."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -64,6 +65,38 @@ def no_broadcast(spark):
 
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _final_plan(df) -> str:
+    """Run ``df``, then return its executed plan: the adaptive final plan
+    only, without the initial plan printed after it."""
+    assert df.collect()
+    return _executed_plan(df).split("== Initial Plan ==")[0]
+
+
+_TREE_PREFIX = re.compile(r"^[\s:+\-|]*")
+
+
+def _subtrees(plan: str, node: str) -> list[str]:
+    """The plan text below each ``node`` operator of a plan tree."""
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        depth = len(_TREE_PREFIX.match(line).group(0))
+        if not re.match(rf"(\*\(\d+\) )?{node}\b", line[depth:]):
+            continue
+        below = []
+        for nxt in lines[i + 1:]:
+            if len(_TREE_PREFIX.match(nxt).group(0)) <= depth:
+                break
+            below.append(nxt)
+        out.append("\n".join(below))
+    return out
+
+
+def _scans(plan: str, table: str) -> bool:
+    """Whether ``plan`` scans the warehouse directory ``table``."""
+    return re.search(rf"/{table}[\],]", plan) is not None
 
 
 def test_history_instance_join_is_shuffle_free(warehouses, no_broadcast):
@@ -198,3 +231,44 @@ def test_bucketed_histories_keep_revision_subsort(warehouses, spark):
     assert sort_row is not None
     assert "citation_instance_id" in sort_row["data_type"], sort_row
     assert "revision_id" in sort_row["data_type"], sort_row
+
+
+def test_point_routes_are_exchange_free(warehouses):
+    """The revision list and the web-resource lookup are filters on a
+    derived card table: no shuffle and no broadcast."""
+    _, bucketed = warehouses
+    url = bucketed["web_resources"].select("url").first()[0]
+    for df in (serving.article_revisions(bucketed, 100),
+               serving.web_resource_lookup(bucketed, url)):
+        plan = _final_plan(df)
+        assert "Exchange" not in plan, plan
+
+
+def test_template_report_never_moves_normalized_citations(warehouses):
+    """Only the filtered template_data side is broadcast;
+    normalized_citations streams past it through no Exchange."""
+    _, bucketed = warehouses
+    td = bucketed["template_data"].filter("parameter_value IS NOT NULL").first()
+    plan = _final_plan(serving.template_report(
+        bucketed, td.wiki_template_id, td.parameter_key, td.parameter_value))
+    assert _scans(plan, "normalized_citations"), plan
+    (broadcast,) = _subtrees(plan, "BroadcastExchange")
+    assert _scans(broadcast, "template_data"), plan
+    for node in ("Exchange", "BroadcastExchange"):
+        for below in _subtrees(plan, node):
+            assert not _scans(below, "normalized_citations"), plan
+
+
+def test_citation_history_never_broadcasts_revisions(warehouses):
+    """The citation's instances and history rows are broadcast; the
+    revisions scan is streamed, and the sort is one exchange to a single
+    partition, not a range partitioning."""
+    _, bucketed = warehouses
+    sha1 = bucketed["citation_cards"].select("normalized_sha1").first()[0]
+    plan = _final_plan(serving.citation_history(bucketed, sha1))
+    assert _scans(plan, "revisions"), plan
+    broadcasts = _subtrees(plan, "BroadcastExchange")
+    assert broadcasts, plan
+    for below in broadcasts:
+        assert not _scans(below, "revisions"), plan
+    assert "rangepartitioning" not in plan, plan

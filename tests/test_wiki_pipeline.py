@@ -10,12 +10,13 @@ from pyspark.sql import functions as F
 
 from wiki_references_db_spark.functions.wikitext import get_sha1, normalize_wikitext
 from wiki_references_db_spark.plans.dedup_tables import dedup_staging
-from wiki_references_db_spark.plans.stage import stage_revisions
+from wiki_references_db_spark.plans.stage import read_staging, stage_revisions, write_staging
 from wiki_references_db_spark.plans.warehouse import (
     build_warehouse,
     orphan_stats,
 )
 from wiki_references_db_spark.queries.citations import citations_at_revision
+from wiki_references_db_spark.schemas import STAGING
 from wiki_references_db_spark.sources.mwrev import (
     read_mwrev_bundles,
     write_mwrev_zst,
@@ -71,6 +72,24 @@ def test_mwrev_roundtrip(pipeline):
     assert rows[1001].revision_timestamp == "2020-01-01 00:00:00"
     assert REF_A in rows[1001].revision_text
     assert rows[3001].source_bundle == "fixture-00.mwrev.zst"
+
+
+def test_written_staging_matches_declared_schemas(pipeline, spark, tmp_path):
+    """``read_staging`` reads with the ``STAGING`` schemas instead of
+    inferring them, so every table ``write_staging`` writes must carry
+    exactly those column names and types: a drifted column would
+    otherwise read back as NULLs."""
+    out_dir = str(tmp_path / "staging")
+    write_staging(pipeline["staging"], out_dir)
+    assert sorted(os.listdir(out_dir)) == sorted(STAGING)
+    for name, schema in STAGING.items():
+        written = spark.read.parquet(f"{out_dir}/{name}").schema
+        assert [(f.name, f.dataType) for f in written] == [
+            (f.name, f.dataType) for f in schema
+        ], name
+    staged = read_staging(spark, out_dir)
+    for name in ("citation_instances", "template_data"):
+        assert staged[name].count() == pipeline["staging"][name].count() > 0
 
 
 def test_staging_dedup_counts(pipeline):

@@ -3,8 +3,9 @@
 The extractor is the engine's only irreducible Python logic (SURVEY §2.10).
 It runs as Arrow-batched pandas UDFs — never row-at-a-time Python:
 
-- ``extract_references_udf``: revision_text -> array<struct> of extracted
-  references (a UDTF in DataFrame terms; follow with ``explode``)
+- ``make_extract_references_udf(domain)``: revision_text -> array<struct>
+  of extracted references under the domain's section/template config
+  (a UDTF in DataFrame terms; follow with ``explode``)
 - ``normalize_wikitext_udf``: scalar normalizer
 - ``sha1_hex_udf`` is NOT needed: content hashing uses the built-in
   ``F.sha1`` (JVM-side) on the UDF outputs.
@@ -13,7 +14,6 @@ It runs as Arrow-batched pandas UDFs — never row-at-a-time Python:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from wiki_references_db_spark.functions.extract import extract_references
@@ -21,12 +21,6 @@ from wiki_references_db_spark.functions.wikitext import normalize_wikitext
 from pyspark.sql.types import StringType
 
 from wiki_references_db_spark.schemas import EXTRACTED_REFERENCES
-
-
-@pandas_udf(EXTRACTED_REFERENCES)
-def extract_references_en_udf(texts: pd.Series) -> pd.Series:
-    """extract_references for the default domain (en.wikipedia.org)."""
-    return texts.map(lambda t: extract_references(t, include_offsets=True))
 
 
 def make_extract_references_udf(domain: str):
@@ -44,8 +38,3 @@ def make_extract_references_udf(domain: str):
 @pandas_udf(StringType())
 def normalize_wikitext_udf(texts: pd.Series) -> pd.Series:
     return texts.map(normalize_wikitext)
-
-
-def extracted_references_col(domain: str = "en.wikipedia.org"):
-    """Column expression: extract references from ``revision_text``."""
-    return make_extract_references_udf(domain)(F.col("revision_text"))

@@ -320,4 +320,10 @@ def write_staging(
 
 
 def read_staging(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
-    return {name: spark.read.parquet(f"{out_dir}/{name}") for name in STAGING}
+    """The 11 staging tables under ``out_dir``, read with their declared
+    ``STAGING`` schemas: no job merges the parquet footers to infer
+    them."""
+    return {
+        name: spark.read.schema(schema).parquet(f"{out_dir}/{name}")
+        for name, schema in STAGING.items()
+    }

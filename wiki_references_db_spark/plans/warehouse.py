@@ -16,13 +16,19 @@ Replaces the reference's FK-ordered PostgreSQL load
 Table shapes follow reference:models.py:18-572 (minus the Postgres-only
 columns); `id` columns are BIGINT.
 
-One derived table rides along: ``citation_cards``, one row per
-``normalized_citations.id`` with the citation's hydrated child
-collections (other articles, extracted links, templates with their
-parameters).  It is a pure function of the other tables, built from
-the same build's outputs and rebuilt with them — never updated
-incrementally — so the two hydrating serving routes read it instead of
-re-aggregating the child tables on every request.
+Three derived tables ride along, one per serving lookup that would
+otherwise aggregate or join whole tables on every request.  Each is a
+pure function of the other tables, built from the same build's outputs
+and rebuilt with them — never updated incrementally — and keyed for a
+point read:
+
+- ``citation_cards`` (lookup key ``normalized_sha1``): one row per
+  normalized citation with its hydrated child collections (other
+  articles, extracted links, templates with their parameters);
+- ``revision_cards`` (lookup key ``page_id``): one row per revision
+  with its ``citation_count``;
+- ``web_resource_cards`` (lookup key ``url``): one row per web
+  resource with its domain and the citations that reference it.
 """
 
 from __future__ import annotations
@@ -148,7 +154,8 @@ def build_warehouse(staging: dict[str, DataFrame]) -> dict[str, DataFrame]:
         "wiki_templates": wiki_templates,
         "template_data": template_data,
     }
-    warehouse["citation_cards"] = citation_cards(warehouse)
+    for name, (derive, _) in _DERIVED.items():
+        warehouse[name] = derive(warehouse)
     return warehouse
 
 
@@ -180,25 +187,14 @@ def citation_cards(w: dict[str, DataFrame]) -> DataFrame:
     ``extracted_links`` (url + web_resource_id) and ``templates``
     (offset, name, id, parameter map).  Every array has a deterministic
     order via array_sort on its leading struct fields; a citation
-    without children carries NULL, not an empty array (left joins)."""
-    nc = w["normalized_citations"]
-    other_articles = (
-        nc.join(
-            w["documents"].select(F.col("id").alias("appears_on_article"),
-                                  F.col("page_id").alias("oa_page_id")),
-            "appears_on_article",
-            "left",
-        )
-        .groupBy(F.col("id").alias("normalized_id"))
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("oa_page_id").alias("page_id"),
-                        F.col("appears_on_article").alias("document_id"),
-                    )
-                )
-            ).alias("other_articles")
+    without links or templates carries NULL, not an empty array (left
+    joins).  ``other_articles`` always holds exactly one entry: the
+    ``id`` is unique and so is the document it left-joins to, so the
+    array is built per row, with no aggregation."""
+    other_articles = F.array(
+        F.struct(
+            F.col("oa_page_id").alias("page_id"),
+            F.col("appears_on_article").alias("document_id"),
         )
     )
 
@@ -252,15 +248,79 @@ def citation_cards(w: dict[str, DataFrame]) -> DataFrame:
     )
 
     return (
-        nc.select(
+        w["normalized_citations"]
+        .join(
+            w["documents"].select(F.col("id").alias("appears_on_article"),
+                                  F.col("page_id").alias("oa_page_id")),
+            "appears_on_article",
+            "left",
+        )
+        .select(
             F.col("id").alias("normalized_id"),
             "normalized_sha1",
             "reference_normalized",
+            other_articles.alias("other_articles"),
         )
-        .join(other_articles, "normalized_id", "left")
         .join(links, "normalized_id", "left")
         .join(tpl, "normalized_id", "left")
     )
+
+
+def revision_cards(w: dict[str, DataFrame]) -> DataFrame:
+    """One row per revision with its ``citation_count``: the number of
+    citation-instance history rows at that revision, 0 when there are
+    none (J3/A4, reference:api_v1.py:68-142)."""
+    counts = w["citation_histories"].groupBy("revision_id").agg(
+        F.count("citation_instance_id").alias("citation_count")
+    )
+    return w["revisions"].join(counts, "revision_id", "left").select(
+        "page_id",
+        "revision_id",
+        "revision_timestamp",
+        "parent_revision_id",
+        F.coalesce(F.col("citation_count"), F.lit(0)).alias("citation_count"),
+    )
+
+
+def web_resource_cards(w: dict[str, DataFrame]) -> DataFrame:
+    """One row per web resource with its domain, its page id and
+    ``referenced_by``: the sorted (normalized_sha1, appears_on_article)
+    of every citation that links to it, NULL when none does
+    (reference:api_v1.py:531-570)."""
+    refs = (
+        w["ncwr"]
+        .join(
+            w["normalized_citations"].select(
+                F.col("id").alias("normalized_id"),
+                "normalized_sha1",
+                "appears_on_article",
+            ),
+            "normalized_id",
+        )
+        .groupBy("web_resource_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("normalized_sha1", "appears_on_article"))
+            ).alias("referenced_by")
+        )
+    )
+    dom = w["domains"].select(F.col("id").alias("domain_id"), F.col("value").alias("domain"))
+    return (
+        w["web_resources"]
+        .join(dom, "domain_id", "left")
+        .select(F.col("id").alias("web_resource_id"), "url", "domain", "numeric_page_id")
+        .join(refs, "web_resource_id", "left")
+    )
+
+
+# The derived tables: name -> (builder over the other tables, lookup
+# key).  Each is written sorted within partitions on its lookup key, so
+# parquet min/max stats let a point read skip row groups.
+_DERIVED = {
+    "citation_cards": (citation_cards, "normalized_sha1"),
+    "revision_cards": (revision_cards, "page_id"),
+    "web_resource_cards": (web_resource_cards, "url"),
+}
 
 
 def orphan_stats(staging: dict[str, DataFrame]) -> dict[str, int]:
@@ -327,10 +387,13 @@ def write_warehouse(
     The files are still plain zstd parquet — a reader without the
     catalog entry sees an ordinary parquet directory.
 
-    ``citation_cards`` is written like the other dimension tables, as
-    plain zstd parquet.  It is derived from the other tables of the
-    same ``warehouse`` dict, so writing them together keeps it
-    consistent; there is no incremental update of it."""
+    The three derived tables — ``citation_cards`` on
+    ``normalized_sha1``, ``revision_cards`` on ``page_id`` and
+    ``web_resource_cards`` on ``url`` — are written as plain zstd
+    parquet sorted within partitions on that lookup key.  They are
+    derived from the other tables of the same ``warehouse`` dict, so
+    writing them together keeps them consistent; there is no
+    incremental update of them."""
     from wiki_references_db_spark.plans.bucketing import write_bucketed
 
     for name, df in warehouse.items():
@@ -346,7 +409,9 @@ def write_warehouse(
             )
             continue
         writer_df = df
-        if name == "citation_histories":
+        if name in _DERIVED:
+            writer_df = df.sortWithinPartitions(_DERIVED[name][1])
+        elif name == "citation_histories":
             if history_buckets:
                 writer_df = df.repartition(history_buckets, "citation_instance_id")
             writer_df = writer_df.sortWithinPartitions("citation_instance_id", "revision_id")

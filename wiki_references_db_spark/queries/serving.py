@@ -18,14 +18,25 @@ Endpoint map (reference:api_v1.py / explorer.py):
   (reference:api_v1.py:531-570)
 
 Request parameters arrive as Python literals (they come from an HTTP
-layer); Catalyst folds them into pushed-down predicates.  Hydration is
-read, not computed: the warehouse's ``citation_cards`` table
-(plans/warehouse.py) holds every normalized citation's collected
-links, templates and other articles, built once with the warehouse —
-the set-oriented form of the reference's batched IN-lists +
+layer); Catalyst folds them into pushed-down predicates.  What every
+request of a session would recompute is read, not computed: the
+warehouse's derived tables (plans/warehouse.py) are built once with it
+— the set-oriented form of the reference's batched IN-lists +
 Python-side grouping (J8, the N+1 avoidance noted at
-reference:explorer.py:155-160).  A request joins or filters it; no
-request aggregates a child table.
+reference:explorer.py:155-160).  Every route other than the flagship
+is a point read of one narrow table or broadcasts only its filtered
+side:
+
+- the revision list filters ``revision_cards`` on ``page_id``;
+- the citation card filters ``citation_cards`` on ``normalized_sha1``;
+- the web-resource lookup filters ``web_resource_cards`` on ``url``;
+- the template report semi-joins ``normalized_citations`` to the
+  broadcast ids of the matching ``template_data`` rows;
+- the citation history broadcasts the citation's instances, then their
+  history rows, past a streamed ``revisions`` scan.
+
+The flagship joins ``citation_cards`` to the page's broadcast
+instances.  No request aggregates a child table.
 """
 
 from __future__ import annotations
@@ -34,22 +45,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wiki_references_db_spark.operators.relational import paginate
+from wiki_references_db_spark.plans.warehouse import _id
 from wiki_references_db_spark.queries.citations import type_label
 
 
 def article_revisions(w: dict[str, DataFrame], page_id: int, limit: int = 100,
                       offset: int = 0) -> DataFrame:
-    """Revisions of a page with citation counts; zero-citation revisions
-    kept by the left join (J3/A4)."""
-    rev = w["revisions"].filter(F.col("page_id") == page_id)
-    ch = w["citation_histories"]
-    counted = (
-        rev.join(ch, "revision_id", "left")
-        .groupBy("revision_id", "revision_timestamp", "parent_revision_id")
-        .agg(F.count("citation_instance_id").alias("citation_count"))
+    """Revisions of a page with citation counts, zero-citation revisions
+    included (J3/A4): the page's ``revision_cards`` rows."""
+    rev = w["revision_cards"].filter(F.col("page_id") == page_id).select(
+        "revision_id", "revision_timestamp", "parent_revision_id", "citation_count"
     )
     return paginate(
-        counted,
+        rev,
         [F.col("revision_timestamp").asc(), F.col("revision_id").asc()],
         limit=limit,
         offset=offset,
@@ -175,21 +183,29 @@ def citation_history(
     w: dict[str, DataFrame], normalized_sha1: str, page_id: int | None = None
 ) -> DataFrame:
     """All revisions where any instance of a normalized citation appears
-    (reference:api_v1.py:444-476)."""
-    nc = w["normalized_citations"].filter(F.col("normalized_sha1") == normalized_sha1)
-    ci = w["citation_instances"].join(
-        F.broadcast(nc.select(F.col("id").alias("normalized_id"))), "normalized_id"
+    (reference:api_v1.py:444-476), one row per instance and revision, so
+    two instances in one revision give two rows.  The normalized id is
+    the warehouse's own hash of the sha1, a literal filter on the
+    instances.  The citation's instances, then their history rows, are
+    broadcast; ``revisions`` is only streamed.  The result is one
+    citation's history, so it sorts within one partition after one hash
+    exchange instead of a range-partitioned sort."""
+    ci = w["citation_instances"].filter(
+        F.col("normalized_id") == _id(F.lit(normalized_sha1))
     )
     hist = w["citation_histories"].join(
         F.broadcast(ci.select(F.col("id").alias("citation_instance_id"))),
         "citation_instance_id",
     )
-    out = hist.join(w["revisions"], "revision_id").select(
-        "revision_id", "revision_timestamp", "page_id"
-    )
+    rev = w["revisions"]
     if page_id is not None:
-        out = out.filter(F.col("page_id") == page_id)
-    return out.orderBy("revision_timestamp", "revision_id")
+        rev = rev.filter(F.col("page_id") == page_id)
+    return (
+        rev.join(F.broadcast(hist.select("revision_id")), "revision_id")
+        .select("revision_id", "revision_timestamp", "page_id")
+        .repartition(1, "revision_id")
+        .sortWithinPartitions("revision_timestamp", "revision_id")
+    )
 
 
 def citation_detail(w: dict[str, DataFrame], normalized_sha1: str) -> DataFrame:
@@ -211,19 +227,19 @@ def template_report(
     limit: int = 100,
     offset: int = 0,
 ) -> DataFrame:
-    """Citations using template T with key=value (reference:api_v1.py:479-528)."""
+    """Citations using template T with key=value (reference:api_v1.py:479-528):
+    ``normalized_citations`` semi-joined to the broadcast ids of the
+    matching ``template_data`` rows.  ``normalized_citations.id`` is
+    unique, so each citation comes out once."""
     td = w["template_data"].filter(
         (F.col("wiki_template_id") == wiki_template_id)
         & (F.col("parameter_key") == parameter_key)
         & (F.col("parameter_value") == parameter_value)
     )
-    nc = w["normalized_citations"]
     out = (
-        td.select(F.col("normalized_id").alias("id"))
-        .distinct()
-        .join(nc, "id")
+        w["normalized_citations"]
+        .join(F.broadcast(td.select(F.col("normalized_id").alias("id"))), "id", "left_semi")
         .select("normalized_sha1", "reference_normalized", "appears_on_article")
-        .distinct()
     )
     return paginate(
         out, [F.col("normalized_sha1").asc()], limit=limit, offset=offset
@@ -232,44 +248,9 @@ def template_report(
 
 def web_resource_lookup(w: dict[str, DataFrame], url: str) -> DataFrame:
     """Reverse lookup: which citations reference a URL
-    (reference:api_v1.py:531-570)."""
-    wr = w["web_resources"].filter(F.col("url") == url)
-    refs = (
-        w["ncwr"]
-        .join(
-            F.broadcast(wr.select(F.col("id").alias("web_resource_id"))),
-            "web_resource_id",
-        )
-        .join(
-            w["normalized_citations"].select(
-                F.col("id").alias("normalized_id"),
-                "normalized_sha1",
-                "appears_on_article",
-            ),
-            "normalized_id",
-        )
-    )
-    dom = w["domains"].select(F.col("id").alias("domain_id"), F.col("value").alias("domain"))
-    return (
-        wr.join(dom, "domain_id", "left")
-        .select(
-            F.col("id").alias("web_resource_id"),
-            "url",
-            "domain",
-            "numeric_page_id",
-        )
-        .join(
-            refs.groupBy("web_resource_id").agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("normalized_sha1", "appears_on_article")
-                    )
-                ).alias("referenced_by")
-            ),
-            "web_resource_id",
-            "left",
-        )
-    )
+    (reference:api_v1.py:531-570) — the URL's ``web_resource_cards``
+    row."""
+    return w["web_resource_cards"].filter(F.col("url") == url)
 
 
 def name_only_refs(w: dict[str, DataFrame], page_id: int) -> DataFrame:
