@@ -2,6 +2,7 @@
 default, skip-and-continue in permissive mode."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from wiki_references_db_spark.sources.mwrev import (
     read_mwrev_bundles,
@@ -24,9 +25,40 @@ def test_corrupt_bundle_fails_fast_by_default(spark, tmp_path):
         read_mwrev_bundles(spark, str(bundles)).count()
 
 
-def test_corrupt_bundle_skipped_in_permissive_mode(spark, tmp_path):
-    bundles = _bundles(tmp_path)
+@pytest.fixture
+def one_scan_partition(spark):
+    """Pack every bundle into one scan partition, so the parser sees all
+    of them in one batch."""
+    keys = ("spark.sql.files.openCostInBytes", "spark.sql.files.minPartitionNum")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    spark.conf.set(keys[0], "1")
+    spark.conf.set(keys[1], "1")
+    yield
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize(
+    "bad, goods",
+    [
+        ("a-bad", ("b-good", "c-good")),  # sorted before the good bundles
+        ("b-bad", ("a-good", "c-good")),  # sorted between two good bundles
+    ],
+    ids=["bad-first", "bad-between"],
+)
+def test_corrupt_bundle_skipped_in_permissive_mode(
+    spark, tmp_path, one_scan_partition, bad, goods
+):
+    bundles = tmp_path / "bundles"
+    bundles.mkdir()
+    (bundles / f"{bad}.mwrev.zst").write_bytes(b"\x00not zstd at all\xff\xfe")
+    write_mwrev_zst(str(bundles / f"{goods[0]}.mwrev.zst"), FIXTURE[:5])
+    write_mwrev_zst(str(bundles / f"{goods[1]}.mwrev.zst"), FIXTURE[5:7])
     df = read_mwrev_bundles(spark, str(bundles), skip_corrupt=True)
-    rows = df.collect()
-    assert {r.revision_id for r in rows} == {1001, 1002, 1003, 1004, 1005}
-    assert {r.source_bundle for r in rows} == {"good.mwrev.zst"}
+    rows = df.select("*", F.spark_partition_id().alias("part")).collect()
+    assert {r.part for r in rows} == {0}  # all three bundles in one batch
+    assert {r.revision_id for r in rows} == {1001, 1002, 1003, 1004, 1005, 2001, 2002}
+    assert {r.source_bundle for r in rows} == {f"{g}.mwrev.zst" for g in goods}

@@ -21,6 +21,7 @@ from wiki_references_db_spark.sources.mwrev import (
     read_mwrev_bundles,
     write_mwrev_zst,
 )
+from wiki_references_db_spark.streaming.ingest import stream_revision_bundles
 
 REF_A = "<ref name=a>https://a.example/x</ref>"
 REF_B = "{{Sfn|Smith|2020|p=1}}"
@@ -72,6 +73,80 @@ def test_mwrev_roundtrip(pipeline):
     assert rows[1001].revision_timestamp == "2020-01-01 00:00:00"
     assert REF_A in rows[1001].revision_text
     assert rows[3001].source_bundle == "fixture-00.mwrev.zst"
+
+
+@pytest.mark.parametrize("reader", ["batch", "stream"])
+def test_mwrev_readers_keep_nullable_ids_exact(spark, tmp_path, reader):
+    """Both readers share one parser: an id column holding a NULL must
+    not go through float64, which rounds ids above 2**53."""
+    big = 2**53 + 1
+    bundles = tmp_path / "bundles"
+    bundles.mkdir()
+    write_mwrev_zst(
+        str(bundles / "ids.mwrev.zst"),
+        [_rev(7, big + 2, None, 1, "a"), _rev(7, big + 4, big, 2, "b")],
+    )
+    if reader == "batch":
+        rows = read_mwrev_bundles(spark, str(bundles)).collect()
+    else:
+        query = (
+            stream_revision_bundles(spark, str(bundles))
+            .writeStream.format("memory")
+            .queryName("mwrev_ids")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+        rows = spark.table("mwrev_ids").collect()
+        spark.catalog.dropTempView("mwrev_ids")
+    assert sorted((r.revision_id, r.parent_revision_id) for r in rows) == [
+        (big + 2, None),
+        (big + 4, big),
+    ]
+
+
+def _physical_nodes(plan) -> list:
+    """Operator nodes of a physical plan, not entering cached relations."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    nodes, kids = [plan], plan.children()
+    for i in range(kids.size()):
+        nodes += _physical_nodes(kids.apply(i))
+    return nodes
+
+
+def _runs_python(node) -> bool:
+    return any(w in node.nodeName() for w in ("Python", "Pandas", "Arrow"))
+
+
+def test_extract_phase_is_one_python_pass_and_one_persist(spark, tmp_path):
+    """The bundle parse and the extraction UDF run once per revision:
+    staging persists one relation, the only one with Python in its plan,
+    and nothing reads the bundles through an RDD."""
+    bundles = tmp_path / "bundles"
+    bundles.mkdir()
+    write_mwrev_zst(str(bundles / "fixture-00.mwrev.zst"), FIXTURE)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    staging = stage_revisions(read_mwrev_bundles(spark, str(bundles)))
+    write_staging(staging, str(tmp_path / "staging"))
+    assert len(set(persisted().keys()) - before) == 1
+
+    cached = {}
+    for name, df in staging.items():
+        nodes = _physical_nodes(df._jdf.queryExecution().executedPlan())
+        assert not [n.nodeName() for n in nodes if _runs_python(n)], name
+        assert not [n for n in nodes if "ExistingRDD" in n.nodeName()], name
+        for n in nodes:
+            if n.nodeName() == "InMemoryTableScan":
+                plan = n.relation().cachedPlan()
+                cached[plan.treeString()] = plan
+    assert len(cached) == 1
+    relation = [n.nodeName() for n in _physical_nodes(*cached.values())]
+    assert relation.count("MapInPandas") == 1
+    assert relation.count("ArrowEvalPython") == 1
+    assert not [n for n in relation if "ExistingRDD" in n]
 
 
 def test_written_staging_matches_declared_schemas(pipeline, spark, tmp_path):

@@ -186,7 +186,7 @@ def extract_references(
     """Extract all citation-ish references from article wikitext.
 
     Spark surface: wrapped as a pandas UDF returning
-    ``array<struct>`` + ``explode`` (see functions/udfs.py).
+    ``array<struct>`` + ``explode`` (see plans/stage.py).
     """
     if not wikitext:
         return []

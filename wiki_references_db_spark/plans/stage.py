@@ -1,10 +1,14 @@
 """Extract phase: raw revisions -> the 11 natural-key staging tables.
 
 Reproduces reference:build_db.py:289-463 (process_revisions) as one
-declarative plan: the extractor UDF runs once per revision, ``explode``
-fans out references, and the staging tables are narrow projections of the
-result.  The reference's subprocess pool, batch buffers, file rotation
-and marker files all dissolve into the Spark job.
+declarative plan.  Like the reference's loop, each revision enters
+Python once after its bundle is parsed: one Arrow-batched pandas UDF
+extracts its references, normalizes each one and derives its template
+rows.  That per-revision result is the phase's only persisted relation;
+``explode`` fans it out to references and template rows, and the staging
+tables are narrow JVM projections of those.  The reference's subprocess
+pool, batch buffers, file rotation and marker files all dissolve into
+the Spark job.
 
 Faithfully reproduced quirks:
 - ``revisions`` staging rows are emitted per *reference*, so a revision
@@ -23,30 +27,12 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from wiki_references_db_spark.storage import persist_corpus
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-from wiki_references_db_spark.functions.udfs import make_extract_references_udf, normalize_wikitext_udf
-from wiki_references_db_spark.functions.wikitext import normalize_template_name
-from wiki_references_db_spark.schemas import STAGING
-
-TEMPLATE_ROWS = ArrayType(
-    StructType(
-        [
-            StructField("template_name", StringType()),
-            StructField("offset_start", IntegerType()),
-            StructField("parameter_key", StringType()),
-            StructField("parameter_value", StringType()),
-        ]
-    )
-)
+from wiki_references_db_spark.functions.extract import extract_references
+from wiki_references_db_spark.functions.wikitext import normalize_template_name, normalize_wikitext
+from wiki_references_db_spark.schemas import EXTRACTED_REFERENCES, STAGING
+from wiki_references_db_spark.storage import persist_corpus
 
 
 def _find_nth(haystack: str, needle: str, n: int) -> int:
@@ -58,30 +44,20 @@ def _find_nth(haystack: str, needle: str, n: int) -> int:
     return start
 
 
-def _template_rows_one(norm: str, templates, ref_offset) -> list[dict]:
+def _template_rows_one(norm: str, templates: list[dict], ref_offset: int) -> list[dict]:
     out: list[dict] = []
-    if templates is None:
-        return out
-    norm = norm or ""
     for idx, tpl in enumerate(templates, start=1):
-        if tpl is None:
-            continue
-        name = normalize_template_name(tpl["template_name"] or "")
+        name = normalize_template_name(tpl["template_name"])
         if not name:
             continue
         offset = _find_nth(norm, "{{" + name, idx)
         if offset < 0:
-            offset = norm.find(tpl["full_text"] or "")
+            offset = norm.find(tpl["full_text"])
             if offset < 0:
-                offset = int(ref_offset) if ref_offset is not None else 0
-        # Arrow hands nested arrays to pandas as numpy arrays: use
-        # explicit None/len checks, never bare truthiness.
-        params = tpl["parameters"]
-        if params is None:
-            params = []
+                offset = ref_offset
         emitted = False
-        for p in params:
-            if p is None or not p["key"]:
+        for p in tpl["parameters"]:
+            if not p["key"]:
                 continue
             out.append(
                 {
@@ -105,42 +81,34 @@ def _template_rows_one(norm: str, templates, ref_offset) -> list[dict]:
     return out
 
 
-@pandas_udf(TEMPLATE_ROWS)
-def _template_rows_udf(
-    norm: pd.Series, templates: pd.Series, ref_offset: pd.Series
-) -> pd.Series:
-    # Plain zip over the three series: pd.DataFrame.apply(axis=1) builds a
-    # pandas Row object per input row, which is pure overhead on the
-    # hottest Python stage of the extract pipeline.
-    return pd.Series(
-        [_template_rows_one(n, t, o)
-         for n, t, o in zip(norm, templates, ref_offset)],
-        index=norm.index,
-        dtype=object,
-    )
-
-
-def extract_refs(raw: DataFrame, domain: str = "en.wikipedia.org") -> DataFrame:
-    """Raw revisions -> one row per extracted reference with normalized
-    text + content hashes.  The two UDF invocations are the only Python
-    in the plan; hashing is JVM-side ``sha1``."""
-    extract_udf = make_extract_references_udf(domain)
-    refs = raw.select(
-        "page_id",
-        "namespace_id",
-        "revision_id",
-        "parent_revision_id",
-        "revision_timestamp",
-        "source_bundle",
-        F.explode(extract_udf(F.col("revision_text"))).alias("ref"),
-    ).filter(F.trim(F.col("ref.raw_reference")) != "")
-    return (
-        refs.withColumn(
-            "reference_normalized", normalize_wikitext_udf(F.col("ref.raw_reference"))
+def _extract_one(text: str | None, domain: str) -> list[dict]:
+    out: list[dict] = []
+    for ref in extract_references(text, include_offsets=True, domain=domain):
+        norm = normalize_wikitext(ref["raw_reference"])
+        out.append(
+            {
+                "raw_reference": ref["raw_reference"],
+                "reference_normalized": norm,
+                "reference_type": ref["reference_type"],
+                "reference_name": ref["reference_name"],
+                "urls": ref["urls"],
+                "template_rows": _template_rows_one(
+                    norm, ref["templates"], ref["offset_start"]
+                ),
+            }
         )
-        .withColumn("normalized_sha1", F.sha1(F.col("reference_normalized")))
-        .withColumn("raw_sha1", F.sha1(F.col("ref.raw_reference")))
-    )
+    return out
+
+
+def _extract_udf(domain: str):
+    """revision_text -> EXTRACTED_REFERENCES under the domain's
+    section/template config: the extract phase's one Python pass."""
+
+    @pandas_udf(EXTRACTED_REFERENCES)
+    def _udf(texts: pd.Series) -> pd.Series:
+        return texts.map(lambda t: _extract_one(t, domain))
+
+    return _udf
 
 
 def stage_revisions(
@@ -153,21 +121,35 @@ def stage_revisions(
     """
     spark = raw.sparkSession
     language_code = domain.split(".")[0]
-    # The exploded-references DataFrame feeds 7 of the 11 staging tables;
-    # persist it (memory, disk spill) so the two pandas UDFs — by far the
-    # most expensive stage — run ONCE over the corpus instead of once per
-    # table sink.  This is the Spark form of the reference's single-pass
-    # process_revisions loop (reference:build_db.py:289-463), which also
-    # extracts each revision exactly once and fans out to 11 buffers.
-    # DISK_ONLY: one row per extracted reference (corpus-proportional).
-    refs = persist_corpus(extract_refs(raw, domain))
-    # The two page-metadata tables (documents, curid web_resources) need
-    # only (page_id, namespace_id) — persist that slim projection so they
-    # do not re-decompress and re-parse every bundle per sink.  Unlike
-    # `raw` itself this carries no revision text, so the cache is a few
-    # bytes per revision at any scale.
-    # DISK_ONLY: two ints per revision (slim but corpus-proportional).
-    raw_meta = persist_corpus(raw.select("page_id", "namespace_id"))
+    # One row per revision with its extracted references: every staging
+    # table reads it, so the bundle parse and the extraction UDF run once
+    # per revision instead of once per sink.  The revision text does not
+    # ride along.
+    # DISK_ONLY: one row per revision, sized by its references
+    # (corpus-proportional).
+    revs = persist_corpus(
+        raw.select(
+            "page_id",
+            "namespace_id",
+            "revision_id",
+            "parent_revision_id",
+            "revision_timestamp",
+            _extract_udf(domain)(F.col("revision_text")).alias("refs"),
+        )
+    )
+    # The blank-reference filter stays JVM-side: Spark's trim strips
+    # spaces only, Python's strip() all whitespace.
+    refs = revs.select(
+        "page_id",
+        "revision_id",
+        "parent_revision_id",
+        "revision_timestamp",
+        F.explode("refs").alias("ref"),
+    ).filter(F.trim(F.col("ref.raw_reference")) != "").select(
+        "*",
+        F.sha1(F.col("ref.reference_normalized")).alias("normalized_sha1"),
+        F.sha1(F.col("ref.raw_reference")).alias("raw_sha1"),
+    )
 
     def cast_to(table: str, df: DataFrame) -> DataFrame:
         schema = STAGING[table]
@@ -175,11 +157,14 @@ def stage_revisions(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
 
-    containers = spark.createDataFrame([(domain,)], STAGING["containers"])
+    # The domain's own rows are literals over a one-row range: no staged
+    # table reads driver-side Python data through an RDD.
+    domain_row = spark.range(1, numPartitions=1)
+    containers = domain_row.select(F.lit(domain).alias("label"))
 
     documents = cast_to(
         "documents",
-        raw_meta.select(
+        revs.select(
             F.lit(language_code).alias("language_code"),
             F.lit(domain).alias("has_container_label"),
             F.col("page_id"),
@@ -189,7 +174,7 @@ def stage_revisions(
     curid_url = F.concat(
         F.lit(f"https://{domain}/w/index.php?curid="), F.col("page_id").cast("string")
     )
-    wr_curid = raw_meta.select(
+    wr_curid = revs.select(
         curid_url.alias("url"),
         F.lit(domain).alias("domain_label"),
         F.col("page_id").alias("numeric_page_id"),
@@ -212,7 +197,9 @@ def stage_revisions(
 
     domains = cast_to(
         "domains",
-        spark.createDataFrame([(domain, domain)], STAGING["domains"]).unionByName(
+        domain_row.select(
+            F.lit(domain).alias("value"), F.lit(domain).alias("for_container_label")
+        ).unionByName(
             ref_urls.select(
                 url_host.alias("value"),
                 F.lit(None).cast("string").alias("for_container_label"),
@@ -235,7 +222,7 @@ def stage_revisions(
         "normalized_citations",
         refs.select(
             "normalized_sha1",
-            "reference_normalized",
+            F.col("ref.reference_normalized").alias("reference_normalized"),
             F.col("page_id").alias("appears_on_page_id"),
             F.lit(domain).alias("appears_on_domain"),
         ),
@@ -254,20 +241,9 @@ def stage_revisions(
 
     ncwr = cast_to("ncwr", ref_urls.select("normalized_sha1", "url"))
 
-    # Persisted: the template-row UDF feeds two sinks (wiki_templates,
-    # template_data); without the persist it runs once per sink.
     tpl_rows = refs.select(
-        "normalized_sha1",
-        F.explode(
-            _template_rows_udf(
-                F.col("reference_normalized"),
-                F.col("ref.templates"),
-                F.col("ref.offset_start"),
-            )
-        ).alias("t"),
+        "normalized_sha1", F.explode("ref.template_rows").alias("t")
     )
-    # DISK_ONLY: one row per template occurrence (corpus-proportional).
-    tpl_rows = persist_corpus(tpl_rows)
 
     wiki_templates = cast_to(
         "wiki_templates",

@@ -128,39 +128,27 @@ RAW_REVISION = _schema(
     ("source_bundle", StringType()),
 )
 
-# Per-reference struct returned by the wikitext extractor UDF
-# (field inventory: reference:build_db.py:334-435).
-REFERENCE_STRUCT = StructType(
-    [
-        StructField("raw_reference", StringType()),
-        StructField("offset_start", IntegerType()),
-        StructField("length", IntegerType()),
-        StructField("reference_type", ShortType()),
-        StructField("reference_name", StringType()),
-        StructField("urls", ArrayType(StringType())),
-        StructField(
-            "templates",
+# Per-revision output of the extract phase's one Python pass
+# (plans/stage.py): each reference's extracted fields that the staging
+# tables read (inventory: reference:build_db.py:334-435), its normalized
+# text, and its template rows.
+EXTRACTED_REFERENCES = ArrayType(
+    _schema(
+        ("raw_reference", StringType()),
+        ("reference_normalized", StringType()),
+        ("reference_type", ShortType()),
+        ("reference_name", StringType()),
+        ("urls", ArrayType(StringType())),
+        (
+            "template_rows",
             ArrayType(
-                StructType(
-                    [
-                        StructField("template_name", StringType()),
-                        StructField("full_text", StringType()),
-                        StructField(
-                            "parameters",
-                            ArrayType(
-                                StructType(
-                                    [
-                                        StructField("key", StringType()),
-                                        StructField("value", StringType()),
-                                    ]
-                                )
-                            ),
-                        ),
-                    ]
+                _schema(
+                    ("template_name", StringType()),
+                    ("offset_start", IntegerType()),
+                    ("parameter_key", StringType()),
+                    ("parameter_value", StringType()),
                 )
             ),
         ),
-    ]
+    )
 )
-
-EXTRACTED_REFERENCES = ArrayType(REFERENCE_STRUCT)

@@ -6,10 +6,12 @@ Line protocol (reference:build_db.py:222-276):
 - lines starting with a single space are revision text (prefix stripped)
 - all other lines are ignored
 
-The protocol is stateful per file, so a file is one split: parallelism is
-across bundle files (exactly the reference's subprocess-per-file model,
-reference:build_all.py:125-129).  Spark surface: ``binaryFile`` scan ->
-``flatMap(parse)`` -> DataFrame with the explicit RAW_REVISION schema.
+The protocol is stateful per file, so a file is one parse unit:
+parallelism is across bundle files (exactly the reference's
+subprocess-per-file model, reference:build_all.py:125-129).  Spark
+surface: ``binaryFile`` scan -> ``mapInPandas(parse_bundle_batches)`` ->
+DataFrame with the explicit RAW_REVISION schema.  The batch reader and
+the streaming reader (streaming/ingest.py) share that one parser.
 
 zstd framing is handled with pyarrow's codec (the ``zstandard`` module is
 not available here; pyarrow emits/consumes standard zstd frames).
@@ -21,12 +23,21 @@ import io
 import os
 from collections.abc import Iterator
 
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, LongType
 
 from wiki_references_db_spark.schemas import RAW_REVISION
 
 _ZSTD = pa.Codec("zstd")
+
+# Nullable pandas dtypes per RAW_REVISION column: a plain int column
+# holding a None turns float64 and loses ids above 2**53.
+_DTYPES = {
+    f.name: {IntegerType(): "Int32", LongType(): "Int64"}.get(f.dataType, object)
+    for f in RAW_REVISION.fields
+}
 
 
 def _decompress_zstd(data: bytes) -> bytes:
@@ -90,12 +101,32 @@ def parse_mwrev_zst_bytes(data: bytes, source_bundle: str = "") -> Iterator[dict
     )
 
 
+def parse_bundle_batches(
+    batches: Iterator[pd.DataFrame], skip_corrupt: bool = False
+) -> Iterator[pd.DataFrame]:
+    """``mapInPandas`` body: (path, content) bundle batches -> one
+    RAW_REVISION frame per bundle, so a batch never holds the revisions
+    of all its bundles at once.  ``skip_corrupt`` drops each bundle that
+    fails zstd/UTF-8 decode on its own; the rest of its batch survives."""
+    for pdf in batches:
+        for path, content in zip(pdf["path"], pdf["content"]):
+            try:
+                revs = list(parse_mwrev_zst_bytes(bytes(content), os.path.basename(path)))
+            except (OSError, ValueError):  # zstd (pyarrow) or UTF-8 decode
+                if not skip_corrupt:
+                    raise
+                continue
+            yield pd.DataFrame(
+                {c: pd.array([r[c] for r in revs], dtype=t) for c, t in _DTYPES.items()}
+            )
+
+
 def read_mwrev_bundles(
     spark: SparkSession, path_or_glob: str, skip_corrupt: bool = False
 ) -> DataFrame:
     """Scan a directory/glob of .mwrev.zst bundles into a raw-revision
-    DataFrame.  One bundle file = one task; provenance is carried in
-    ``source_bundle`` (S9, reference:models.py:363-380).
+    DataFrame.  Provenance is carried in ``source_bundle`` (S9,
+    reference:models.py:363-380).
 
     ``skip_corrupt=True`` drops bundles that fail zstd/UTF-8 decode
     instead of failing the job — the PERMISSIVE mode for a 100 TB
@@ -107,18 +138,9 @@ def read_mwrev_bundles(
         .load(path_or_glob)
         .select("path", "content")
     )
-
-    def parse_row(row) -> Iterator[dict]:
-        try:
-            yield from parse_mwrev_zst_bytes(
-                bytes(row.content), os.path.basename(row.path)
-            )
-        except Exception:
-            if not skip_corrupt:
-                raise
-
-    rdd = binary.rdd.flatMap(parse_row)
-    return spark.createDataFrame(rdd, RAW_REVISION)
+    return binary.mapInPandas(
+        lambda batches: parse_bundle_batches(batches, skip_corrupt), RAW_REVISION
+    )
 
 
 def write_mwrev_zst(path: str, revisions: list[dict]) -> None:

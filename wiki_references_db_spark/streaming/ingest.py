@@ -8,38 +8,18 @@ natively (SURVEY §2.11): a bundle is processed exactly once across
 restarts, with no marker-file bookkeeping.
 
 ``stream_revision_bundles`` is the streaming twin of
-``sources.mwrev.read_mwrev_bundles`` (mapInPandas instead of an RDD
-flatMap, since streaming DataFrames have no RDD view).
+``sources.mwrev.read_mwrev_bundles``: the same ``binaryFile`` scan and
+the same ``parse_bundle_batches`` parser, over a file stream.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from wiki_references_db_spark.plans.dedup_tables import dedup_staging
 from wiki_references_db_spark.plans.stage import stage_revisions
 from wiki_references_db_spark.schemas import RAW_REVISION
-from wiki_references_db_spark.sources.mwrev import parse_mwrev_zst_bytes
-
-_COLUMNS = [f.name for f in RAW_REVISION.fields]
-
-
-def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows: list[dict] = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            rows.extend(
-                parse_mwrev_zst_bytes(bytes(content), os.path.basename(path))
-            )
-        yield (
-            pd.DataFrame(rows, columns=_COLUMNS)
-            if rows
-            else pd.DataFrame(columns=_COLUMNS)
-        )
+from wiki_references_db_spark.sources.mwrev import parse_bundle_batches
 
 
 def stream_revision_bundles(
@@ -57,7 +37,7 @@ def stream_revision_bundles(
         .load(bundles_dir)
         .select("path", "content")
     )
-    return binary.mapInPandas(_parse_batches, RAW_REVISION)
+    return binary.mapInPandas(parse_bundle_batches, RAW_REVISION)
 
 
 def ingest_available_bundles(
