@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -19,3 +20,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+_groups = itertools.count()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` and returns the number of Spark
+    jobs it started, read from a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn) -> int:
+        group = f"count-jobs-{next(_groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -6,7 +6,8 @@ over the same fixture warehouse as test_serving.py."""
 import pytest
 
 from wiki_references_db_spark.functions.wikitext import get_sha1, normalize_wikitext
-from wiki_references_db_spark.router import ServingRouter
+from wiki_references_db_spark.router import Result, ServingRouter
+from wiki_references_db_spark.wsgi import result_body
 from tests.test_serving import warehouse  # noqa: F401  (module-scoped fixture)
 from tests.test_wiki_pipeline import REF_A, REF_B
 
@@ -90,6 +91,23 @@ def test_citation_404_and_200(router):
     assert r.status == 200 and len(r.df.collect()) == 1
     h = router.dispatch("GET", f"/api/v1/citation/{sha}/history")
     assert h.status == 200 and len(h.df.collect()) > 0
+
+
+@pytest.mark.parametrize("route", ["citation", "web_resource"])
+def test_card_routes_cost_one_job(router, warehouse, count_jobs, route):  # noqa: F811
+    """The card routes take their one card row in the 404 probe itself,
+    and the WSGI body serializes those rows: one Spark job a request."""
+    if route == "citation":
+        path, params = f"/api/v1/citation/{get_sha1(normalize_wikitext(REF_A))}", {}
+    else:
+        path, params = "/api/v1/web_resource", {"url": _article_url(warehouse)}
+    bodies = []
+    jobs = count_jobs(lambda: bodies.append(
+        result_body(router.dispatch("GET", path, params))))
+    assert jobs == 1
+    r = router.dispatch("GET", path, params)
+    assert r.status == 200 and len(r.rows) == 1
+    assert bodies == [result_body(Result(200, r.df))]
 
 
 def test_template_param_validation(router):

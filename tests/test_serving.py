@@ -74,6 +74,60 @@ def test_article_citations_raw_mode(warehouse):
     assert "normalized_sha1" not in out[get_sha1(REF_A)].asDict()
 
 
+def test_instance_cards_runs_cover_the_history(warehouse):
+    """One card per citation instance; its presence runs are sorted,
+    disjoint, and cover exactly the page revisions in its history, so
+    their lengths sum to ``appearance_count``."""
+    cards = warehouse["instance_cards"].collect()
+    ids = [c.id for c in cards]
+    assert len(ids) == len(set(ids))
+    assert sorted(ids) == sorted(r.id for r in warehouse["citation_instances"].collect())
+    page_revs = {}
+    for r in warehouse["revisions"].collect():
+        page_revs.setdefault(r.page_id, []).append(r.revision_id)
+    seen = {}
+    for h in warehouse["citation_histories"].collect():
+        seen.setdefault(h.citation_instance_id, set()).add(h.revision_id)
+    for c in cards:
+        runs = [(r.from_id, r.to_id) for r in c.presence]
+        assert runs == sorted(runs)
+        assert all(a[1] < b[0] for a, b in zip(runs, runs[1:]))
+        lengths = [sum(1 for rid in page_revs[c.page_id] if lo <= rid <= hi)
+                   for lo, hi in runs]
+        covered = {rid for rid in page_revs[c.page_id]
+                   for lo, hi in runs if lo <= rid <= hi}
+        assert covered == seen[c.id]
+        assert sum(lengths) == c.appearance_count == len(seen[c.id])
+        assert (c.first_seen_id, c.last_seen_id) == (runs[0][0], runs[-1][1])
+
+
+def test_article_citations_lifecycle_across_a_gap(warehouse):
+    """REF_A is in 1001-1002, gone at 1003, back at 1004 and gone at
+    1005: two presence runs, each visible with its own removed_at."""
+    a_sha = get_sha1(normalize_wikitext(REF_A))
+
+    def ref_a(revision_id):
+        rows = serving.article_citations(warehouse, 100, revision_id=revision_id).collect()
+        return [r for r in rows if r.normalized_sha1 == a_sha]
+
+    (at_1002,) = ref_a(1002)
+    assert at_1002.removed_at_revision_id == 1003
+    assert ref_a(1003) == []
+    (at_1004,) = ref_a(1004)
+    assert at_1004.removed_at_revision_id == 1005
+    for a in (at_1002, at_1004):
+        assert a.appearance_count == 3
+        assert a.currently_visible is False
+
+
+def test_article_citations_other_pages_revision_is_empty(warehouse):
+    """Revision 2001 belongs to page 200: asked for page 100 it selects
+    nothing, in both modes."""
+    for raw in (False, True):
+        assert serving.article_citations(
+            warehouse, 100, revision_id=2001, raw=raw).collect() == []
+
+
 def test_citation_history_cross_page(warehouse):
     b_sha = get_sha1(normalize_wikitext(REF_B))
     rows = serving.citation_history(warehouse, b_sha).collect()

@@ -1,8 +1,8 @@
 """Bucketed warehouse write path (SURVEY §7.3 risk 5): the two
 instance-keyed fact tables land bucketed on their co-location key, so
-the flagship serving path's history join and lifecycle aggregation plan
-with ZERO Exchange on the bucketed side — the write pays the 28.8B-row
-shuffle once instead of every serving query."""
+instance-keyed history joins and aggregations plan with ZERO Exchange on
+the bucketed side — the write pays the 28.8B-row shuffle once instead of
+every query.  The serving routes read the derived card tables."""
 
 import os
 import re
@@ -18,7 +18,9 @@ from wiki_references_db_spark.plans.warehouse import (
     write_warehouse,
 )
 from wiki_references_db_spark.queries import serving
+from wiki_references_db_spark.router import ServingRouter
 from wiki_references_db_spark.sources.mwrev import read_mwrev_bundles, write_mwrev_zst
+from wiki_references_db_spark.wsgi import result_body
 from tests.test_wiki_pipeline import FIXTURE
 
 BUCKETS = 4
@@ -120,7 +122,7 @@ def test_history_instance_join_is_shuffle_free(warehouses, no_broadcast):
 
 
 def test_lifecycle_aggregation_is_exchange_free(warehouses, no_broadcast):
-    """The flagship's lifecycle stats (groupBy citation_instance_id over
+    """Per-instance lifecycle stats (groupBy citation_instance_id over
     the history table) need no Exchange over the bucketed scan."""
     _, bucketed = warehouses
     stats = bucketed["citation_histories"].groupBy("citation_instance_id").agg(
@@ -159,26 +161,54 @@ def test_flagship_identical_over_bucketed_warehouse(warehouses):
     assert len(got_rows) > 0
 
 
-def test_flagship_plans_zero_instance_exchange_over_bucketed(warehouses):
-    """The FLAGSHIP serving query end-to-end (article_citations — the
-    path behind wiki_citations_at_revision and the WSGI shell) over the
-    bucketed-catalog warehouse plans its history work with ZERO
-    Exchange on the instance key: the one lifecycle aggregation
-    (groupBy citation_instance_id, with the target/next presence flags
-    folded in) runs over the bucketed history scan joined only to the
-    page's broadcast revisions, so it keeps the bucket distribution.
-    The same query over a plain (unbucketed) warehouse DOES shuffle on
-    that key — pinning that the assertion discriminates, not that the
-    plan happens to be small."""
-    plain, bucketed = warehouses
-    shuffle_marker = "hashpartitioning(citation_instance_id"
+def test_flagship_reads_no_history_and_shuffles_nothing(warehouses):
+    """The FLAGSHIP serving query (article_citations — the path behind
+    the registered serving query and the WSGI shell) is a filter on the
+    page's instance_cards rows: it scans no citation_histories and
+    plans no shuffle Exchange; raw mode broadcasts nothing either, and
+    normalized mode broadcasts only the page's instance cards into its
+    citation_cards join."""
+    _, bucketed = warehouses
+    for raw in (False, True):
+        plan = _final_plan(
+            serving.article_citations(bucketed, 100, revision_id=1002, raw=raw))
+        assert _scans(plan, "instance_cards"), plan
+        assert not _scans(plan, "citation_histories"), plan
+        assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+        broadcasts = _subtrees(plan, "BroadcastExchange")
+        if raw:
+            assert not broadcasts, plan
+        else:
+            (broadcast,) = broadcasts
+            assert _scans(broadcast, "instance_cards"), plan
 
-    got = serving.article_citations(bucketed, 100, revision_id=1002)
-    plan = _executed_plan(got)
-    assert shuffle_marker not in plan, plan
 
-    want = serving.article_citations(plain, 100, revision_id=1002)
-    assert shuffle_marker in _executed_plan(want)
+def test_flagship_costs_two_jobs_raw_three_normalized(warehouses, count_jobs):
+    """Through the router and the WSGI body: one job resolves the
+    revisions, raw mode reads instance_cards in one more, and normalized
+    mode adds the broadcast of the page's visible cards."""
+    _, bucketed = warehouses
+    router = ServingRouter(bucketed)
+    for raw, want in (("true", 2), ("false", 3)):
+        params = {"revision_id": "1002", "raw": raw}
+        jobs = count_jobs(lambda: result_body(
+            router.dispatch("GET", "/api/v1/article/100/citations", params)))
+        assert jobs == want, raw
+
+
+def test_read_warehouse_runs_no_job(warehouses, spark, tmp_path, count_jobs):
+    """read_warehouse reads the plain tables with their declared
+    WAREHOUSE schemas: no schema-inference job runs, and every schema
+    equals the one Spark infers from the files build_warehouse's
+    output was written to."""
+    plain, _ = warehouses
+    out_dir = str(tmp_path / "wh_plain")
+    write_warehouse(plain, out_dir, bucketed=False)
+    tables = {}
+    assert count_jobs(lambda: tables.update(read_warehouse(spark, out_dir))) == 0
+    assert sorted(tables) == sorted(plain)
+    for name, df in tables.items():
+        assert df.schema == spark.read.parquet(f"{out_dir}/{name}").schema, name
 
 
 def test_flagship_hydration_reads_citation_cards(warehouses):

@@ -16,7 +16,7 @@ Replaces the reference's FK-ordered PostgreSQL load
 Table shapes follow reference:models.py:18-572 (minus the Postgres-only
 columns); `id` columns are BIGINT.
 
-Three derived tables ride along, one per serving lookup that would
+Four derived tables ride along, one per serving lookup that would
 otherwise aggregate or join whole tables on every request.  Each is a
 pure function of the other tables, built from the same build's outputs
 and rebuilt with them — never updated incrementally — and keyed for a
@@ -28,13 +28,18 @@ point read:
 - ``revision_cards`` (lookup key ``page_id``): one row per revision
   with its ``citation_count``;
 - ``web_resource_cards`` (lookup key ``url``): one row per web
-  resource with its domain and the citations that reference it.
+  resource with its domain and the citations that reference it;
+- ``instance_cards`` (lookup key ``page_id``): one row per citation
+  instance with its lifecycle (first/last seen, appearance count) and
+  ``presence``, the runs of consecutive page revisions it appears in.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from wiki_references_db_spark.schemas import WAREHOUSE
 
 
 def _id(*cols) -> F.Column:
@@ -313,6 +318,66 @@ def web_resource_cards(w: dict[str, DataFrame]) -> DataFrame:
     )
 
 
+def instance_cards(w: dict[str, DataFrame]) -> DataFrame:
+    """One row per citation instance that appears in a revision of its
+    page: the instance's columns, its lifecycle over the page's
+    revisions (first/last seen id and timestamp, ``appearance_count``)
+    and ``presence``, the sorted maximal ``(from_id, to_id)`` runs of
+    consecutive page revisions (in ``revision_id`` order) that carry
+    it (reference:api_v1.py:145-364).  The instance is visible at a
+    revision R of its page iff R lies in one of the runs, so a request
+    needs no history rows.
+
+    The runs are gaps-and-islands: a revision's ordinal within its page
+    minus its row number within the instance is constant along a run.
+    History rows count only at revisions of the instance's own page."""
+    rev = w["revisions"].select(
+        "revision_id",
+        "page_id",
+        "revision_timestamp",
+        F.row_number()
+        .over(Window.partitionBy("page_id").orderBy("revision_id"))
+        .alias("page_ordinal"),
+    )
+    in_instance = Window.partitionBy("id", "page_id").orderBy("revision_id")
+    runs = (
+        w["citation_histories"]
+        .join(rev, "revision_id")
+        .withColumnRenamed("citation_instance_id", "id")
+        .withColumn("island", F.col("page_ordinal") - F.row_number().over(in_instance))
+        .groupBy("id", "page_id", "island")
+        .agg(
+            F.min("revision_id").alias("from_id"),
+            F.max("revision_id").alias("to_id"),
+            F.min("revision_timestamp").alias("first_ts"),
+            F.max("revision_timestamp").alias("last_ts"),
+            F.count("revision_id").alias("n"),
+        )
+    )
+    lifecycle = runs.groupBy("id", "page_id").agg(
+        F.min("from_id").alias("first_seen_id"),
+        F.min("first_ts").alias("first_seen_ts"),
+        F.max("to_id").alias("last_seen_id"),
+        F.max("last_ts").alias("last_seen_ts"),
+        F.sum("n").alias("appearance_count"),
+        F.array_sort(F.collect_list(F.struct("from_id", "to_id"))).alias("presence"),
+    )
+    return w["citation_instances"].join(lifecycle, ["id", "page_id"]).select(
+        "id",
+        "page_id",
+        "raw_sha1",
+        "normalized_id",
+        "reference_type",
+        "reference_name",
+        "first_seen_id",
+        "first_seen_ts",
+        "last_seen_id",
+        "last_seen_ts",
+        "appearance_count",
+        "presence",
+    )
+
+
 # The derived tables: name -> (builder over the other tables, lookup
 # key).  Each is written sorted within partitions on its lookup key, so
 # parquet min/max stats let a point read skip row groups.
@@ -320,6 +385,7 @@ _DERIVED = {
     "citation_cards": (citation_cards, "normalized_sha1"),
     "revision_cards": (revision_cards, "page_id"),
     "web_resource_cards": (web_resource_cards, "url"),
+    "instance_cards": (instance_cards, "page_id"),
 }
 
 
@@ -341,12 +407,12 @@ def orphan_stats(staging: dict[str, DataFrame]) -> dict[str, int]:
 
 # The two instance-keyed fact tables and their co-location keys:
 # every downstream instance-keyed join (citation_histories ⋈
-# citation_instances on citation_instance_id = id) and the flagship's
-# lifecycle aggregation (groupBy citation_instance_id) plan
-# exchange-free when both land bucketed on these keys with the SAME
-# bucket count.  At the 28.8B-row design point that is THE shuffle to
-# pay once at write time instead of per serving query (SURVEY §7.3
-# risk 5; the reference re-sorts per query inside Postgres instead).
+# citation_instances on citation_instance_id = id) and aggregation
+# (groupBy citation_instance_id) plans exchange-free when both land
+# bucketed on these keys with the SAME bucket count.  At the 28.8B-row
+# design point that is THE shuffle to pay once at write time instead
+# of per query (SURVEY §7.3 risk 5; the reference re-sorts per query
+# inside Postgres instead).
 _BUCKETED_FACTS: dict[str, tuple[list[str], list[str]]] = {
     # name -> (bucket keys, within-bucket sort keys).  The sort keys
     # extend the bucket key where a secondary column matters for
@@ -387,13 +453,13 @@ def write_warehouse(
     The files are still plain zstd parquet — a reader without the
     catalog entry sees an ordinary parquet directory.
 
-    The three derived tables — ``citation_cards`` on
-    ``normalized_sha1``, ``revision_cards`` on ``page_id`` and
-    ``web_resource_cards`` on ``url`` — are written as plain zstd
-    parquet sorted within partitions on that lookup key.  They are
-    derived from the other tables of the same ``warehouse`` dict, so
-    writing them together keeps them consistent; there is no
-    incremental update of them."""
+    The four derived tables — ``citation_cards`` on
+    ``normalized_sha1``, ``revision_cards`` on ``page_id``,
+    ``web_resource_cards`` on ``url`` and ``instance_cards`` on
+    ``page_id`` — are written as plain zstd parquet sorted within
+    partitions on that lookup key.  They are derived from the other
+    tables of the same ``warehouse`` dict, so writing them together
+    keeps them consistent; there is no incremental update of them."""
     from wiki_references_db_spark.plans.bucketing import write_bucketed
 
     for name, df in warehouse.items():
@@ -427,10 +493,12 @@ def read_warehouse(
 ) -> dict[str, DataFrame]:
     """Load a written warehouse back as table DataFrames — the serving
     layer's production input (parquet scans with pushdown, not
-    recomputed join DAGs).  Pass the ``table_prefix`` used at write
-    time to read the bucketed fact tables through the catalog (the
-    bucket layout lives in the table catalog, not the files — a plain
-    parquet read of the same directory is correct but re-shuffles)."""
+    recomputed join DAGs).  Plain tables are read with their declared
+    ``WAREHOUSE`` schemas, so no job merges parquet footers to infer
+    them.  Pass the ``table_prefix`` used at write time to read the
+    bucketed fact tables through the catalog (the bucket layout lives
+    in the table catalog, not the files — a plain parquet read of the
+    same directory is correct but re-shuffles)."""
     import os
 
     out: dict[str, DataFrame] = {}
@@ -440,5 +508,5 @@ def read_warehouse(
         if table_prefix is not None and name in _BUCKETED_FACTS:
             out[name] = spark.table(f"{table_prefix}_{name}")
         else:
-            out[name] = spark.read.parquet(f"{out_dir}/{name}")
+            out[name] = spark.read.schema(WAREHOUSE[name]).parquet(f"{out_dir}/{name}")
     return out

@@ -23,11 +23,14 @@ request of a session would recompute is read, not computed: the
 warehouse's derived tables (plans/warehouse.py) are built once with it
 — the set-oriented form of the reference's batched IN-lists +
 Python-side grouping (J8, the N+1 avoidance noted at
-reference:explorer.py:155-160).  Every route other than the flagship
-is a point read of one narrow table or broadcasts only its filtered
-side:
+reference:explorer.py:155-160).  Every route is a point read of one
+narrow table or broadcasts only its filtered side:
 
 - the revision list filters ``revision_cards`` on ``page_id``;
+- the flagship resolves its revisions from ``revision_cards``, then
+  filters ``instance_cards`` on ``page_id`` and on the presence runs
+  that hold the target; normalized mode broadcasts those rows into one
+  join to ``citation_cards``;
 - the citation card filters ``citation_cards`` on ``normalized_sha1``;
 - the web-resource lookup filters ``web_resource_cards`` on ``url``;
 - the template report semi-joins ``normalized_citations`` to the
@@ -35,8 +38,7 @@ side:
 - the citation history broadcasts the citation's instances, then their
   history rows, past a streamed ``revisions`` scan.
 
-The flagship joins ``citation_cards`` to the page's broadcast
-instances.  No request aggregates a child table.
+No request aggregates a child table.
 """
 
 from __future__ import annotations
@@ -66,31 +68,48 @@ def article_revisions(w: dict[str, DataFrame], page_id: int, limit: int = 100,
 
 def resolve_revision(w: dict[str, DataFrame], page_id: int,
                      revision_id: int | None) -> dict:
-    """Resolve the flagship's scalar params (target/latest/next revision
-    ids) with ONE tiny aggregation over the page's revisions — the
-    reference's own resolve-then-query serving shape
-    (reference:api_v1.py:153-170).  The 1-row collect keeps every
-    scalar-subquery subtree (and its repeated broadcast jobs) out of the
-    main plan, whose page/revision predicates then push into the
-    parquet scans as literals.  ``latest_revision_id`` is None when the
-    page has no revisions."""
-    rev = w["revisions"].filter(F.col("page_id") == page_id)
+    """Resolve the flagship's scalar params with ONE tiny aggregation
+    over the page's ``revision_cards`` rows — the reference's own
+    resolve-then-query serving shape (reference:api_v1.py:153-170):
+
+    - ``target_revision_id``: the given revision, else the latest;
+    - ``latest_revision_id``: None when the page has no revisions;
+    - ``next_revision_id``: the page's first revision after the given
+      one, None without a given revision;
+    - ``target_exists``: whether the target is a revision of the page.
+
+    The 1-row collect keeps every scalar subquery out of the flagship's
+    plan, whose predicates then reach the scan as literals.  The page's
+    rows are read in one task, so the aggregation needs no exchange and
+    runs as one job."""
+    rev = w["revision_cards"].filter(F.col("page_id") == page_id).coalesce(1)
+    given = F.lit(revision_id).cast("long")
     row = rev.groupBy().agg(
         F.max("revision_id").alias("latest"),
-        F.min(
-            F.when(F.col("revision_id") > F.lit(revision_id), F.col("revision_id"))
-        ).alias("next_after_given"),
+        F.min(F.when(F.col("revision_id") > given, F.col("revision_id"))).alias("next"),
+        F.max(F.col("revision_id") == given).alias("given_exists"),
     ).first()
-    latest = row["latest"] if row else None
+    latest = row["latest"]
     if revision_id is None:
-        target, nxt = latest, None
-    else:
-        target, nxt = revision_id, row["next_after_given"] if row else None
+        return {
+            "target_revision_id": latest,
+            "latest_revision_id": latest,
+            "next_revision_id": None,
+            "target_exists": latest is not None,
+        }
     return {
-        "target_revision_id": target,
+        "target_revision_id": revision_id,
         "latest_revision_id": latest,
-        "next_revision_id": nxt,
+        "next_revision_id": row["next"],
+        "target_exists": bool(row["given_exists"]),
     }
+
+
+def _present_at(revision_id: int) -> F.Column:
+    """Whether one of the instance's ``presence`` runs holds the page
+    revision ``revision_id``."""
+    rid = F.lit(revision_id).cast("long")
+    return F.exists("presence", lambda run: (run["from_id"] <= rid) & (rid <= run["to_id"]))
 
 
 def article_citations(
@@ -109,39 +128,21 @@ def article_citations(
     :func:`resolve_revision` result for the same page and revision, for
     a caller that already ran it.
 
-    The lifecycle is ONE ``groupBy(citation_instance_id)`` over the
-    page's instance history: first/last seen, appearance count, and two
-    presence flags — at the target revision (which instances are
-    visible) and at the next revision (``removed_at``).  The history is
-    joined to the page's revisions only: instance ids hash the page id,
-    so a page's instances appear in no other page's revisions.  Over
-    the bucketed history table the aggregation plans with no
-    Exchange."""
+    The page's ``instance_cards`` rows carry every lifecycle number, so
+    the request reads no history: an instance is visible at the target
+    iff one of its ``presence`` runs holds it, and it was removed at
+    the next revision iff none holds that one.  A target that is not a
+    revision of the page gives no rows.  Raw mode reads nothing else;
+    normalized mode broadcasts the page's visible instances into one
+    join to ``citation_cards``."""
     p = resolved or resolve_revision(w, page_id, revision_id)
     target, latest, nxt = (
         p["target_revision_id"],
         p["latest_revision_id"],
         p["next_revision_id"],
     )
-    rev = w["revisions"].filter(F.col("page_id") == page_id)
-    stats = (
-        w["citation_histories"]
-        .join(F.broadcast(rev.select("revision_id", "revision_timestamp")),
-              "revision_id")
-        .groupBy("citation_instance_id")
-        .agg(
-            F.min("revision_timestamp").alias("first_seen_ts"),
-            F.max("revision_timestamp").alias("last_seen_ts"),
-            F.min("revision_id").alias("first_seen_id"),
-            F.max("revision_id").alias("last_seen_id"),
-            F.count("revision_id").alias("appearance_count"),
-            F.max(F.col("revision_id") == F.lit(target).cast("long")).alias("__at_target"),
-            F.max(F.col("revision_id") == F.lit(nxt).cast("long")).alias("__at_next"),
-        )
-        .filter(F.col("__at_target"))
-    )
-    ci = w["citation_instances"].filter(F.col("page_id") == page_id)
-    base = stats.join(F.broadcast(ci), stats.citation_instance_id == ci.id)
+    visible = _present_at(target) if p["target_exists"] else F.lit(False)
+    base = w["instance_cards"].filter((F.col("page_id") == page_id) & visible)
 
     lifecycle = [
         "reference_name",
@@ -158,8 +159,10 @@ def article_citations(
         out = base.select(instance_id, "raw_sha1", label, *lifecycle)
     else:
         # removed_at is NULL when the instance is still there at the next
-        # revision, and when there is no next revision (flag NULL).
-        removed_at = F.when(~F.col("__at_next"), F.lit(nxt).cast("long"))
+        # revision, and when there is no next revision.
+        removed_at = F.lit(None).cast("long")
+        if nxt is not None:
+            removed_at = F.when(~_present_at(nxt), F.lit(nxt).cast("long"))
         out = F.broadcast(base).join(w["citation_cards"], "normalized_id").select(
             instance_id,
             "normalized_sha1",

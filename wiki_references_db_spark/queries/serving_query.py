@@ -8,6 +8,10 @@ reference:api_v1.py:145-364, raw mode) against warehouse-SHAPED tables
 — see plans/warehouse.py) derived deterministically from the synthetic
 orders/lineitem tables, so the whole endpoint is value-hash checked by
 the driver against a DuckDB oracle expressing the identical derivation.
+The two derived tables the flagship reads, ``revision_cards`` and
+``instance_cards``, are built from that slice by the warehouse's own
+builders, so the registered query, the router and the WSGI tests run
+one code path.
 
 ``serving_order_null_quirk`` pins the reference explorer's ordering
 quirk O5 (reference:explorer.py:384): a DESC sort whose key maps null to
@@ -22,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wiki_references_db_spark.operators.relational import paginate
+from wiki_references_db_spark.plans.warehouse import instance_cards, revision_cards
 from wiki_references_db_spark.queries import register
 from wiki_references_db_spark.queries.citations import (
     STAGING_CTES,
@@ -58,7 +63,9 @@ def derive_warehouse_for_page(
     build into a pushed-down parquet filter on orders plus one
     broadcast join, instead of a corpus-wide md5 + shuffle pass.  This
     is the plan a 100 TB GET /article/<id>/citations needs: touch one
-    page's data, never the corpus."""
+    page's data, never the corpus.  The slice carries ``revision_cards``
+    and ``instance_cards`` too; ``revisions`` has no parent ids, so
+    ``parent_revision_id`` is NULL."""
     from wiki_references_db_spark.operators.relational import distinct_on
 
     orders = load_table(spark, sf_dir, "orders")
@@ -69,6 +76,7 @@ def derive_warehouse_for_page(
     revisions = ord_p.select(
         F.col("o_orderkey").alias("revision_id"),
         F.col("o_custkey").alias("page_id"),
+        F.lit(None).cast("long").alias("parent_revision_id"),
         F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias(
             "revision_timestamp"
         ),
@@ -126,14 +134,13 @@ def derive_warehouse_for_page(
         _ci_id().alias("citation_instance_id"), "revision_id"
     ).distinct()
     # Persist the page-sliced frames (hot working set, storage.py
-    # policy; released by the per-query clearCache()): the endpoint
-    # reads the page's revisions twice (revision resolution, then the
-    # lifecycle aggregation), and a cached frame spares each later read
-    # the lineitem-scan ⋈ broadcast + md5 + distinct chain
-    # (citation_histories and citation_instances are read once each).
-    # A long-running caller without that clearCache contract (e.g. a
-    # per-request WSGI handler) must pass persist=False or unpersist
-    # the frames itself — cache entries otherwise accumulate per page.
+    # policy; released by the per-query clearCache()): the two derived
+    # tables below both read the page's revisions, and a cached frame
+    # spares each later read the lineitem-scan ⋈ broadcast + md5 +
+    # distinct chain.  A long-running caller without that clearCache
+    # contract (e.g. a per-request WSGI handler) must pass
+    # persist=False or unpersist the frames itself — cache entries
+    # otherwise accumulate per page.
     out = {
         "revisions": revisions,
         "citation_instances": citation_instances,
@@ -141,6 +148,8 @@ def derive_warehouse_for_page(
     }
     if persist:
         out = {name: df.persist() for name, df in out.items()}
+    out["revision_cards"] = revision_cards(out)
+    out["instance_cards"] = instance_cards(out)
     return out
 
 
@@ -210,8 +219,8 @@ def serving_article_citations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GET /article/<id>/citations?raw=1 (reference:api_v1.py:145-282)
     run through the ACTUAL serving endpoint function against
     warehouse-shaped tables — presence at the target revision and
-    lifecycle stats from one per-instance aggregation, currently_visible,
-    and the endpoint's last_seen-desc pagination."""
+    lifecycle stats read from the page's ``instance_cards`` rows,
+    currently_visible, and the endpoint's last_seen-desc pagination."""
     p = resolve_target_params(spark, sf_dir)
     wh = derive_warehouse_for_page(spark, sf_dir, p["page_id"])
     return article_citations(

@@ -36,6 +36,7 @@ class Result:
     status: int
     df: DataFrame | None = None
     error: dict | None = None
+    rows: list | None = None  # ``df``'s rows, when the router already took them
 
 
 def _err(msg: str, code: int) -> Result:
@@ -62,7 +63,8 @@ class ServingRouter:
     The only driver-side data access is the reference's own
     resolve-then-query shape: 1-row existence probes for point
     entities, and the flagship's 1-row revision resolution (404
-    semantics) — never result-set materialization.
+    semantics).  A route whose whole result is one card row takes that
+    row itself, so its probe is its one job.
     """
 
     ROUTES = [
@@ -81,8 +83,17 @@ class ServingRouter:
     # -- point-entity probes (reference's .first() then 404) ------------
 
     def _citation_exists(self, sha1: str) -> bool:
-        nc = self.w["normalized_citations"]
-        return bool(nc.filter(F.col("normalized_sha1") == sha1).take(1))
+        cards = self.w["citation_cards"].filter(F.col("normalized_sha1") == sha1)
+        return bool(cards.select("normalized_sha1").collect())
+
+    @staticmethod
+    def _card(df: DataFrame, missing: str) -> Result:
+        """A point route over a card table: 404 when ``df`` is empty,
+        else 200 with its rows, taken in one job."""
+        rows = df.collect()
+        if not rows:
+            return _err(missing, 404)
+        return Result(200, df, rows=rows)
 
     def _resolve_url_page(self, url: str):
         wr = (
@@ -142,9 +153,7 @@ class ServingRouter:
         )
 
     def _h_citation(self, m, params) -> Result:
-        if not self._citation_exists(m["sha1"]):
-            return _err("Citation not found", 404)
-        return Result(200, serving.citation_detail(self.w, m["sha1"]))
+        return self._card(serving.citation_detail(self.w, m["sha1"]), "Citation not found")
 
     def _h_history(self, m, params) -> Result:
         if not self._citation_exists(m["sha1"]):
@@ -174,9 +183,7 @@ class ServingRouter:
         url = params.get("url")
         if not url:
             return _err("url parameter is required", 400)
-        if not self.w["web_resources"].filter(F.col("url") == url).take(1):
-            return _err("Web resource not found", 404)
-        return Result(200, serving.web_resource_lookup(self.w, url))
+        return self._card(serving.web_resource_lookup(self.w, url), "Web resource not found")
 
     _HANDLERS = {
         "article": _h_article,

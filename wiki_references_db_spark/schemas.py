@@ -19,6 +19,7 @@ from pyspark.sql.types import (
     ArrayType,
     IntegerType,
     LongType,
+    MapType,
     ShortType,
     StringType,
     StructField,
@@ -91,6 +92,113 @@ STAGING = {
         ("offset_start", IntegerType()),
         ("parameter_key", StringType()),
         ("parameter_value", StringType()),
+    ),
+}
+
+# --------------------------------------------------------------------------
+# Warehouse layer (surrogate ids): plans/warehouse.build_warehouse's
+# output as its written files read back, every field nullable
+# (tests/test_warehouse_bucketing.py pins the equality)
+# --------------------------------------------------------------------------
+
+_ID, _INT, _STR = LongType(), IntegerType(), StringType()
+
+WAREHOUSE = {
+    "containers": _schema(("id", _ID), ("label", _STR)),
+    "domains": _schema(
+        ("id", _ID), ("value", _STR), ("top_level_domain", _STR), ("for_container", _ID),
+    ),
+    "documents": _schema(
+        ("id", _ID), ("language_code", _STR), ("has_container", _ID), ("page_id", _INT),
+    ),
+    "web_resources": _schema(
+        ("id", _ID),
+        ("url", _STR),
+        ("url_hash", _STR),
+        ("instance_of_document", _ID),
+        ("domain_id", _ID),
+        ("numeric_page_id", _INT),
+        ("numeric_namespace_id", _INT),
+    ),
+    "normalized_citations": _schema(
+        ("id", _ID),
+        ("normalized_sha1", _STR),
+        ("reference_normalized", _STR),
+        ("appears_on_article", _ID),
+    ),
+    "citation_instances": _schema(
+        ("id", _ID),
+        ("normalized_id", _ID),
+        ("page_id", _INT),
+        ("raw_sha1", _STR),
+        ("reference_type", ShortType()),
+        ("reference_name", _STR),
+    ),
+    "citation_histories": _schema(("citation_instance_id", _ID), ("revision_id", _ID)),
+    "revisions": _schema(
+        ("revision_id", _ID),
+        ("page_id", _INT),
+        ("parent_revision_id", _ID),
+        ("revision_timestamp", _STR),
+    ),
+    "ncwr": _schema(("normalized_id", _ID), ("web_resource_id", _ID)),
+    "wiki_templates": _schema(("id", _ID), ("domain", _ID), ("name", _STR)),
+    "template_data": _schema(
+        ("wiki_template_id", _ID),
+        ("normalized_id", _ID),
+        ("offset_start", _INT),
+        ("parameter_key_md5", _STR),
+        ("parameter_key", _STR),
+        ("parameter_value", _STR),
+    ),
+    "citation_cards": _schema(
+        ("normalized_id", _ID),
+        ("normalized_sha1", _STR),
+        ("reference_normalized", _STR),
+        ("other_articles", ArrayType(_schema(("page_id", _INT), ("document_id", _ID)))),
+        ("extracted_links", ArrayType(_schema(("url", _STR), ("web_resource_id", _ID)))),
+        (
+            "templates",
+            ArrayType(
+                _schema(
+                    ("offset_start", _INT),
+                    ("template_name", _STR),
+                    ("wiki_template_id", _ID),
+                    ("parameters", MapType(_STR, _STR)),
+                )
+            ),
+        ),
+    ),
+    "revision_cards": _schema(
+        ("page_id", _INT),
+        ("revision_id", _ID),
+        ("revision_timestamp", _STR),
+        ("parent_revision_id", _ID),
+        ("citation_count", _ID),
+    ),
+    "web_resource_cards": _schema(
+        ("web_resource_id", _ID),
+        ("url", _STR),
+        ("domain", _STR),
+        ("numeric_page_id", _INT),
+        (
+            "referenced_by",
+            ArrayType(_schema(("normalized_sha1", _STR), ("appears_on_article", _ID))),
+        ),
+    ),
+    "instance_cards": _schema(
+        ("id", _ID),
+        ("page_id", _INT),
+        ("raw_sha1", _STR),
+        ("normalized_id", _ID),
+        ("reference_type", ShortType()),
+        ("reference_name", _STR),
+        ("first_seen_id", _ID),
+        ("first_seen_ts", _STR),
+        ("last_seen_id", _ID),
+        ("last_seen_ts", _STR),
+        ("appearance_count", _ID),
+        ("presence", ArrayType(_schema(("from_id", _ID), ("to_id", _ID)))),
     ),
 }
 

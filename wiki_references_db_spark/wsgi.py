@@ -19,8 +19,9 @@ Response contract, mirroring the reference shell:
 
 Scale note: the ONLY driver-side materialization is the final
 ``collect()`` of an already limit-capped serving result (<= MAX_LIMIT
-= 1000 rows by construction, router._page) — the HTTP shell is a
-consumer of the serving layer, never part of a data path.
+= 1000 rows by construction, router._page), or the one card row the
+router already took — the HTTP shell is a consumer of the serving
+layer, never part of a data path.
 """
 
 from __future__ import annotations
@@ -51,6 +52,8 @@ def _json_default(v):
 def result_body(result: Result) -> bytes:
     if result.error is not None:
         payload = result.error
+    elif result.rows is not None:
+        payload = [r.asDict(recursive=True) for r in result.rows]
     elif result.df is not None:
         payload = [r.asDict(recursive=True) for r in result.df.collect()]
     else:  # pragma: no cover - router always sets one of the two
