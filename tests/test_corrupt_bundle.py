@@ -4,6 +4,7 @@ default, skip-and-continue in permissive mode."""
 import pytest
 from pyspark.sql import functions as F
 
+from wiki_references_db_spark.plans.stage import stage_revisions, write_staging
 from wiki_references_db_spark.sources.mwrev import (
     read_mwrev_bundles,
     write_mwrev_zst,
@@ -23,6 +24,16 @@ def test_corrupt_bundle_fails_fast_by_default(spark, tmp_path):
     bundles = _bundles(tmp_path)
     with pytest.raises(Exception):
         read_mwrev_bundles(spark, str(bundles)).count()
+
+
+def test_corrupt_bundle_fails_write_staging(spark, tmp_path):
+    """The concurrent staging writes still surface the parse failure:
+    every table that reads the bundles fails, and the call raises."""
+    staging = stage_revisions(read_mwrev_bundles(spark, str(_bundles(tmp_path))))
+    out_dir = tmp_path / "staging"
+    with pytest.raises(Exception):
+        write_staging(staging, str(out_dir))
+    assert not (out_dir / "citation_instances" / "_SUCCESS").exists()
 
 
 @pytest.fixture

@@ -125,6 +125,31 @@ def test_template_unknown_id_404(router):
     assert r.status == 404 and r.error["error"] == "Template not found"
 
 
+def _template_request(warehouse, value="Smith"):  # noqa: F811
+    tid = {r.name: r.id for r in warehouse["wiki_templates"].collect()}["Sfn"]
+    return f"/api/v1/template/{tid}/report", {"parameter_key": "1", "parameter_value": value}
+
+
+def test_template_report_takes_its_rows_in_two_jobs(router, warehouse, count_jobs):  # noqa: F811
+    """A report with rows is its own existence proof: the broadcast of
+    the matching template_data ids and the page's collect, no probe."""
+    path, params = _template_request(warehouse)
+    bodies = []
+    jobs = count_jobs(lambda: bodies.append(
+        result_body(router.dispatch("GET", path, params))))
+    assert jobs == 2
+    r = router.dispatch("GET", path, params)
+    assert r.status == 200 and len(r.rows) == 1
+    assert bodies == [result_body(Result(200, r.df))]
+
+
+def test_template_known_without_match_is_empty_200(router, warehouse):  # noqa: F811
+    path, params = _template_request(warehouse, value="Nobody")
+    r = router.dispatch("GET", path, params)
+    assert r.status == 200 and r.rows == []
+    assert result_body(r) == b"[]"
+
+
 def test_web_resource_lookup(router, warehouse):  # noqa: F811
     assert router.dispatch("GET", "/api/v1/web_resource").status == 400
     assert (

@@ -211,6 +211,29 @@ def test_read_warehouse_runs_no_job(warehouses, spark, tmp_path, count_jobs):
         assert df.schema == spark.read.parquet(f"{out_dir}/{name}").schema, name
 
 
+def test_bucketed_write_runs_the_sequential_job_count(spark, tmp_path, count_jobs):
+    """The 15 concurrent writes inherit the caller's job group, and run
+    the 32 jobs the same writes ran one table at a time.  The input is
+    materialized first, as the written dedup output is in the ETL: over
+    a persisted relation no job has computed yet, each concurrent
+    adaptive plan submits its own job to materialize the cache."""
+    bundles = tmp_path / "bundles"
+    bundles.mkdir()
+    write_mwrev_zst(str(bundles / "fixture-00.mwrev.zst"), FIXTURE)
+    deduped = dedup_staging(stage_revisions(read_mwrev_bundles(spark, str(bundles))))
+    w = build_warehouse({k: v.localCheckpoint() for k, v in deduped.items()})
+    out_dir = str(tmp_path / "wh")
+    prefix = f"{PREFIX}_jobs"
+    try:
+        jobs = count_jobs(lambda: write_warehouse(
+            w, out_dir, history_buckets=BUCKETS, bucketed=True, table_prefix=prefix))
+        assert sorted(os.listdir(out_dir)) == sorted(w)
+        assert jobs == 32
+    finally:
+        for name in ("citation_histories", "citation_instances"):
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{name}")
+
+
 def test_flagship_hydration_reads_citation_cards(warehouses):
     """Normalized-mode hydration is one join to the prebuilt
     citation_cards table: no per-request collect_list aggregation and

@@ -4,12 +4,14 @@ query.  Fixture shape follows FIXTURES.md §2 (pages with references
 added / removed / re-added across revisions)."""
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
 from wiki_references_db_spark.functions.wikitext import get_sha1, normalize_wikitext
 from wiki_references_db_spark.plans.dedup_tables import dedup_staging
+from wiki_references_db_spark.plans.sink import write_tables
 from wiki_references_db_spark.plans.stage import read_staging, stage_revisions, write_staging
 from wiki_references_db_spark.plans.warehouse import (
     build_warehouse,
@@ -147,6 +149,44 @@ def test_extract_phase_is_one_python_pass_and_one_persist(spark, tmp_path):
     assert relation.count("MapInPandas") == 1
     assert relation.count("ArrowEvalPython") == 1
     assert not [n for n in relation if "ExistingRDD" in n]
+
+
+def _sink_threads() -> list[str]:
+    return [t.name for t in threading.enumerate() if t.name.startswith("write-")]
+
+
+def test_write_staging_is_one_job_per_table_in_the_callers_group(spark, tmp_path, count_jobs):
+    """The 11 concurrent writes inherit the caller's job group: every
+    job is counted in it, one per staged table (the persisted relation
+    is computed inside the first jobs, not by a job of its own)."""
+    bundles = tmp_path / "bundles"
+    bundles.mkdir()
+    write_mwrev_zst(str(bundles / "fixture-00.mwrev.zst"), FIXTURE)
+    staging = stage_revisions(read_mwrev_bundles(spark, str(bundles)))
+    out_dir = str(tmp_path / "staging")
+    assert count_jobs(lambda: write_staging(staging, out_dir)) == len(STAGING) == 11
+    assert sorted(os.listdir(out_dir)) == sorted(STAGING)
+    assert not _sink_threads()
+
+
+def test_write_tables_reraises_after_the_other_writes_finish(spark, tmp_path):
+    """A failing write does not cut the others short: each one runs to
+    its end, then the failure reaches the caller, and no sink thread is
+    left running."""
+    tables = {name: spark.range(100, numPartitions=2) for name in "abcd"}
+
+    def write(name, df):
+        if name == "b":
+            raise ValueError("sink b failed")
+        df.write.parquet(str(tmp_path / name))
+
+    with pytest.raises(ValueError, match="sink b failed"):
+        write_tables(tables, write)
+    for name in "acd":
+        assert (tmp_path / name / "_SUCCESS").exists(), name
+        assert spark.read.parquet(str(tmp_path / name)).count() == 100
+    assert not (tmp_path / "b").exists()
+    assert not _sink_threads()
 
 
 def test_written_staging_matches_declared_schemas(pipeline, spark, tmp_path):

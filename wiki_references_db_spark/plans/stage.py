@@ -31,6 +31,7 @@ from pyspark.sql.functions import pandas_udf
 
 from wiki_references_db_spark.functions.extract import extract_references
 from wiki_references_db_spark.functions.wikitext import normalize_template_name, normalize_wikitext
+from wiki_references_db_spark.plans.sink import write_tables
 from wiki_references_db_spark.schemas import EXTRACTED_REFERENCES, STAGING
 from wiki_references_db_spark.storage import persist_corpus
 
@@ -285,14 +286,22 @@ def write_staging(
 ) -> None:
     """Staging sink: ZSTD parquet with file rotation — the Spark form of
     the reference's ParquetStagingWriter (reference:build_db.py:83-177;
-    row-group sizing is a writer option, not semantics)."""
-    for name, df in staging.items():
+    row-group sizing is a writer option, not semantics).
+
+    The 11 tables are independent jobs submitted together
+    (``plans.sink.write_tables``): each reads at most the phase's one
+    persisted relation, which is computed once, and the first error is
+    re-raised after every write has finished."""
+
+    def write(name: str, df: DataFrame) -> None:
         (
             df.write.mode("overwrite")
             .option("compression", "zstd")
             .option("maxRecordsPerFile", max_records_per_file)
             .parquet(f"{out_dir}/{name}")
         )
+
+    write_tables(staging, write)
 
 
 def read_staging(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:

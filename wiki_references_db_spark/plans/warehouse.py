@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wiki_references_db_spark.plans.sink import write_tables
 from wiki_references_db_spark.schemas import WAREHOUSE
 
 
@@ -459,10 +460,15 @@ def write_warehouse(
     ``page_id`` — are written as plain zstd parquet sorted within
     partitions on that lookup key.  They are derived from the other
     tables of the same ``warehouse`` dict, so writing them together
-    keeps them consistent; there is no incremental update of them."""
+    keeps them consistent; there is no incremental update of them.
+
+    FK ordering is dataflow, so the 15 tables are independent jobs
+    submitted together (``plans.sink.write_tables``): each reads only
+    its own inputs, never another table's written output, and the first
+    error is re-raised after every write has finished."""
     from wiki_references_db_spark.plans.bucketing import write_bucketed
 
-    for name, df in warehouse.items():
+    def write(name: str, df: DataFrame) -> None:
         if bucketed and history_buckets and name in _BUCKETED_FACTS:
             keys, sort_keys = _BUCKETED_FACTS[name]
             write_bucketed(
@@ -473,7 +479,7 @@ def write_warehouse(
                 path=f"{out_dir}/{name}",
                 sort_keys=sort_keys,
             )
-            continue
+            return
         writer_df = df
         if name in _DERIVED:
             writer_df = df.sortWithinPartitions(_DERIVED[name][1])
@@ -486,6 +492,8 @@ def write_warehouse(
             .option("compression", "zstd")
             .parquet(f"{out_dir}/{name}")
         )
+
+    write_tables(warehouse, write)
 
 
 def read_warehouse(

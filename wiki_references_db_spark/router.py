@@ -64,7 +64,8 @@ class ServingRouter:
     resolve-then-query shape: 1-row existence probes for point
     entities, and the flagship's 1-row revision resolution (404
     semantics).  A route whose whole result is one card row takes that
-    row itself, so its probe is its one job.
+    row itself, so its probe is its one job; the template report takes
+    its page first and probes only when the page is empty.
     """
 
     ROUTES = [
@@ -169,15 +170,17 @@ class ServingRouter:
         if not key or value is None:
             return _err("parameter_key and parameter_value are required", 400)
         tid = int(m["tid"])
-        if not self.w["wiki_templates"].filter(F.col("id") == tid).take(1):
-            return _err("Template not found", 404)
         limit, offset = _page(params)
-        return Result(
-            200,
-            serving.template_report(
-                self.w, tid, key, value, limit=limit, offset=offset
-            ),
+        report = serving.template_report(
+            self.w, tid, key, value, limit=limit, offset=offset
         )
+        # Rows first: a template_data row implies its wiki_templates row,
+        # so only an empty page needs the 404 probe.
+        rows = report.collect()
+        templates = self.w["wiki_templates"]
+        if not rows and not templates.filter(F.col("id") == tid).take(1):
+            return _err("Template not found", 404)
+        return Result(200, report, rows=rows)
 
     def _h_web_resource(self, m, params) -> Result:
         url = params.get("url")

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from wiki_references_db_spark.plans.dedup_tables import dedup_staging
+from wiki_references_db_spark.plans.sink import write_tables
 from wiki_references_db_spark.plans.stage import stage_revisions
 from wiki_references_db_spark.schemas import RAW_REVISION
 from wiki_references_db_spark.sources.mwrev import parse_bundle_batches
@@ -53,14 +54,13 @@ def ingest_available_bundles(
     NEW bundles (checkpointed file ledger)."""
     raw = stream_revision_bundles(spark, bundles_dir)
 
+    def append(name: str, df: DataFrame) -> None:
+        df.write.mode("append").option("compression", "zstd").parquet(
+            f"{staging_dir}/{name}"
+        )
+
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        staging = stage_revisions(batch_df, domain=domain)
-        for name, df in staging.items():
-            (
-                df.write.mode("append")
-                .option("compression", "zstd")
-                .parquet(f"{staging_dir}/{name}")
-            )
+        write_tables(stage_revisions(batch_df, domain=domain), append)
 
     (
         raw.writeStream.foreachBatch(write_batch)
@@ -78,10 +78,9 @@ def compact_staging(
     dedup into the consolidated layer (idempotent, overwrite)."""
     from wiki_references_db_spark.plans.stage import read_staging
 
-    staging = read_staging(spark, staging_dir)
-    for name, df in dedup_staging(staging).items():
-        (
-            df.write.mode("overwrite")
-            .option("compression", "zstd")
-            .parquet(f"{deduped_dir}/{name}")
+    def overwrite(name: str, df: DataFrame) -> None:
+        df.write.mode("overwrite").option("compression", "zstd").parquet(
+            f"{deduped_dir}/{name}"
         )
+
+    write_tables(dedup_staging(read_staging(spark, staging_dir)), overwrite)

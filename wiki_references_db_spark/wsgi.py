@@ -19,9 +19,9 @@ Response contract, mirroring the reference shell:
 
 Scale note: the ONLY driver-side materialization is the final
 ``collect()`` of an already limit-capped serving result (<= MAX_LIMIT
-= 1000 rows by construction, router._page), or the one card row the
-router already took — the HTTP shell is a consumer of the serving
-layer, never part of a data path.
+= 1000 rows by construction, router._page), or the rows the router
+already took (a card row, a template report page) — the HTTP shell is
+a consumer of the serving layer, never part of a data path.
 """
 
 from __future__ import annotations
