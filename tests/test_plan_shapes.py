@@ -238,8 +238,6 @@ def test_registry_sweep_no_cartesian_and_bnlj_only_where_intended(registry_plans
         "mixture_temperature_epochs",  # 1-row budget/denominator broadcast
         "table_profile_stats_approx",  # 1-row exact x sketch branch merge
         "auc_rank_eval",  # 1-row totals x 1-row U-statistic final join
-        "perceptron_quality_train",  # 1-row weight-frame broadcast per iter
-        "confusion_matrix_eval",  # 1-row final-weight broadcast scoring scan
         "pr_curve_points",  # 1-row totals broadcast onto per-score frame
         "decision_stump_train",  # same 1-row totals broadcast (shared sweep)
         # broadcast centroid / query-vector products (ANN, k-means)

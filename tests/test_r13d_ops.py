@@ -132,6 +132,27 @@ def test_perceptron_converged_corpus_stops_updating(spark, tmp_path):
         assert (r["w1"], r["w2"], r["w3"], r["w4"], r["b"]) == (3, 3, 0, 16, 1)
 
 
+def test_perceptron_runs_one_aggregate_per_iteration(spark, sf_dir, count_jobs):
+    # The weights stay on the driver: each iteration is one global
+    # aggregate (a map stage and a 1-row result stage under AQE), and
+    # the returned trajectory is literal rows, so construction plus a
+    # noop write stays within 2 jobs per iteration plus the write, and
+    # no weight frame is joined back onto the corpus.
+    from wiki_references_db_spark.queries.pipeline_extra import _PERC_ITERS
+
+    plan = []
+
+    def run():
+        df = all_queries()["perceptron_quality_train"](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        plan.append(df._jdf.queryExecution().executedPlan().toString())
+
+    n_jobs = count_jobs(run)
+    spark.catalog.clearCache()
+    assert 0 < n_jobs <= 2 * _PERC_ITERS + 2
+    assert "BroadcastNestedLoopJoin" not in plan[0]
+
+
 # --------------------------------------------------------------------------
 # auc_rank_eval
 # --------------------------------------------------------------------------

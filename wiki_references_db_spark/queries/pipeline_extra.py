@@ -39,13 +39,14 @@ from wiki_references_db_spark.queries.training import (
     _PQR_CODES,
     _PQR_NSUB,
     _PQR_SUBDIM,
-    _PQR_SUBDIST,
     _PQR_SUBDIST_SQL,
     _TOKENS,
     _TOKENS_SQL,
     _dot_expr,
     _dot_sql,
     _neardup_band_rows,
+    _pq_codebook,
+    _pq_nearest,
 )
 from wiki_references_db_spark.tables import load_table, load_table_parallel
 
@@ -419,7 +420,6 @@ _PQ_SUBSPACES = _PQR_NSUB
 _PQ_SUBDIM = _PQR_SUBDIM  # 64-dim embeddings -> 8 slices of 8
 _PQ_CODES = _PQR_CODES  # codebook entries per subspace (vec_id 0..3)
 
-_PQ_DIST = _PQR_SUBDIST
 _PQ_DIST_SQL = _PQR_SUBDIST_SQL
 
 
@@ -483,26 +483,8 @@ def pq_codebook_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"slice(embedding, subspace * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})"
         ).alias("sub"),
     )
-    codebook = subs.filter(F.col("vec_id") < _PQ_CODES).select(
-        F.col("vec_id").cast("int").alias("code"),
-        F.col("subspace").alias("cb_subspace"),
-        F.col("sub").alias("cent"),
-    )
-    cb_arr = codebook.agg(
-        F.array_sort(
-            F.collect_list(F.struct("cb_subspace", "code", "cent"))
-        ).alias("cb")
-    )
-    best = (
-        "aggregate("
-        "transform(filter(cb, c -> c.cb_subspace = subspace), "
-        f"c -> named_struct('code', c.code, 'd', "
-        f"{_PQ_DIST.replace('cent', 'c.cent')})), "
-        "named_struct('code', CAST(NULL AS INT), 'd', CAST(NULL AS DOUBLE)), "
-        "(b, s) -> IF(b.code IS NULL OR s.d < b.d, s, b))"
-    )
-    win = subs.crossJoin(F.broadcast(cb_arr)).select(
-        "subspace", F.expr(best).alias("bs")
+    win = subs.crossJoin(F.broadcast(_pq_codebook(emb))).select(
+        "subspace", F.expr(_pq_nearest("subspace")).alias("bs")
     )
     return (
         win.select("subspace", F.col("bs.code").alias("code"), F.col("bs.d").alias("dist2"))
@@ -2163,64 +2145,75 @@ def _doc_features(d: DataFrame, with_id: bool = False) -> DataFrame:
     return d.select(*cols)
 
 
+_PERC_WCOLS = ("w1", "w2", "w3", "w4", "b")
+
+
 def _perceptron_frames(spark: SparkSession, sf_dir: str):
     """The shared training loop over the full documents table: returns
-    (per-iteration output frames, final 1-row weight frame, persisted
-    feature frame).  The trainer unions the per-iteration frames;
-    ``confusion_matrix_eval`` applies the final weights back to the
-    features."""
+    (trajectory rows, persisted feature frame).  The trainer emits the
+    trajectory; ``confusion_matrix_eval`` scores the features against
+    its last row's weights."""
     feat = persist_corpus(
         _doc_features(load_table(spark, sf_dir, "documents"))
     )
-    outs, cur = _perceptron_loop(spark, feat)
-    return outs, cur, feat
+    return _perceptron_loop(feat), feat
 
 
-def _perceptron_loop(spark: SparkSession, feat: DataFrame):
+def _perceptron_loop(feat: DataFrame) -> list[tuple]:
     """Three unrolled exact full-batch updates over a (persisted)
-    feature frame; returns (per-iteration output frames, final 1-row
-    weight frame)."""
-    wcols = ["w1", "w2", "w3", "w4", "b"]
-    cur = spark.range(1).select(
-        *[F.lit(0).cast("long").alias(c) for c in wcols]
-    )
-    outs = []
+    feature frame, with the weights held on the driver: each iteration
+    is one aggregate over the documents its literal weights misclassify,
+    and the update ``w + coalesce(sum(y*x), 0)`` is computed inside that
+    aggregate, so it stays BIGINT arithmetic with ANSI overflow checks.
+    Returns one row per iteration: (iter, n_miscls, w1, w2, w3, w4, b).
+
+    The expressions are SQL strings, one py4j call each: built from
+    Column objects, the ~90 calls took 0.11-0.14 s of driver time per
+    iteration (4-vCPU VM), about as long as the iteration's two jobs."""
+    w = (0,) * len(_PERC_WCOLS)
+    grads = [f"y * x{k}" for k in range(1, 5)] + ["y"]
+    traj = []
     for it in range(1, _PERC_ITERS + 1):
-        j = feat.crossJoin(F.broadcast(cur))
-        mis = j.filter(
-            F.expr("y * (w1*x1 + w2*x2 + w3*x3 + w4*x4 + b) <= 0")
-        )
-        upd = mis.agg(
-            F.count(F.lit(1)).cast("long").alias("n_miscls"),
-            *[
-                F.coalesce(F.sum(F.col("y") * F.col(f"x{k}")), F.lit(0))
-                .cast("long")
-                .alias(f"dw{k}")
-                for k in range(1, 5)
-            ],
-            F.coalesce(F.sum("y"), F.lit(0)).cast("long").alias("db"),
-        )
-        nxt = (
-            cur.crossJoin(F.broadcast(upd))
-            .select(
+        row = (
+            feat.filter(f"y * ({_perc_margin_sql(w)}) <= 0")
+            .agg(
+                F.expr("CAST(COUNT(1) AS BIGINT) AS n_miscls"),
                 *[
-                    (F.col(f"w{k}") + F.col(f"dw{k}")).alias(f"w{k}")
-                    for k in range(1, 5)
+                    F.expr(
+                        f"CAST(CAST({wk} AS BIGINT) + COALESCE(SUM({g}), 0)"
+                        f" AS BIGINT) AS {c}"
+                    )
+                    for c, wk, g in zip(_PERC_WCOLS, w, grads)
                 ],
-                (F.col("b") + F.col("db")).alias("b"),
-                "n_miscls",
             )
-            .localCheckpoint(eager=False)
+            .first()
         )
-        outs.append(
-            nxt.select(
-                F.lit(it).cast("int").alias("iter"),
-                "n_miscls",
-                *wcols,
-            )
-        )
-        cur = nxt.select(*wcols)
-    return outs, cur
+        w = tuple(row[c] for c in _PERC_WCOLS)
+        traj.append((it, row["n_miscls"], *w))
+    return traj
+
+
+def _perc_margin_sql(w: tuple) -> str:
+    """The raw margin ``w1*x1 + w2*x2 + w3*x3 + w4*x4 + b`` against the
+    weights ``w = (w1, w2, w3, w4, b)`` as BIGINT literals."""
+    return (
+        "CAST({} AS BIGINT)*x1 + CAST({} AS BIGINT)*x2"
+        " + CAST({} AS BIGINT)*x3 + CAST({} AS BIGINT)*x4"
+        " + CAST({} AS BIGINT)".format(*w)
+    )
+
+
+def _perc_rows(spark: SparkSession, traj: list[tuple]) -> DataFrame:
+    """The trajectory as literal rows over a one-row range: no job, and
+    nothing in the plan but the generator."""
+    rows = ", ".join(
+        "struct(CAST({} AS INT) AS iter, CAST({} AS BIGINT) AS n_miscls,"
+        " CAST({} AS BIGINT) AS w1, CAST({} AS BIGINT) AS w2,"
+        " CAST({} AS BIGINT) AS w3, CAST({} AS BIGINT) AS w4,"
+        " CAST({} AS BIGINT) AS b)".format(*r)
+        for r in traj
+    )
+    return spark.range(1, numPartitions=1).selectExpr(f"inline(array({rows}))")
 
 
 @register(
@@ -2242,27 +2235,27 @@ def perceptron_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trusted/untrusted source lists (fastText-style weak
     supervision, reduced to its exactly-computable core).
 
-    Each iteration is ONE distributed scan-aggregate: join the feature
-    frame with the broadcast 1-row weight frame, filter to misclassified
-    documents (margin y*(w.x + b) <= 0), and sum the integer gradient
-    (dw = sum y*x, db = sum y); the update w += dw keeps every weight an
-    exact BIGINT, so — unlike gradient descent on a sigmoid — the whole
-    trajectory is bit-identical across engines with NO quantization
-    grid.  Per-iteration output rows carry the misclassified count
-    (evaluated BEFORE that iteration's update) and the post-update
-    weights.
+    Each iteration is ONE distributed scan-aggregate: filter the
+    feature frame to the documents misclassified by the current weights
+    (margin y*(w.x + b) <= 0, the weights inlined as BIGINT literals)
+    and aggregate the updated weights w + sum(y*x), b + sum(y) in the
+    same pass; the update keeps every weight an exact BIGINT, so —
+    unlike gradient descent on a sigmoid — the whole trajectory is
+    bit-identical across engines with NO quantization grid.
+    Per-iteration output rows carry the misclassified count (evaluated
+    BEFORE that iteration's update) and the post-update weights.
 
     Scale shape: the corpus is touched once per iteration (map-side
-    partial aggregation, 1-row shuffle); weights stay driver/broadcast
-    sized; the lazy per-step localCheckpoint keeps iteration t+1's plan
-    from re-inlining iteration t's (the mmr_diversify_topk discipline).
+    partial aggregation, 1-row result); the five weights come back to
+    the driver and go out again as literals in the next iteration's
+    filter, so no plan grows with the iteration count and nothing is
+    broadcast or checkpointed.  Training runs while the query is built;
+    the returned frame holds the trajectory as literal rows.
     Magnitude: |w| <= n_docs * max|x|, so margins stay inside BIGINT up
     to ~1e14 documents at these feature scales."""
-    outs, _final, _feat = _perceptron_frames(spark, sf_dir)
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    traj, feat = _perceptron_frames(spark, sf_dir)
+    feat.unpersist()
+    return _perc_rows(spark, traj)
 
 
 # --------------------------------------------------------------------------
@@ -2403,13 +2396,12 @@ def confusion_matrix_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     accuracy ppm floor-divides once at the end), so the full
     train+score+evaluate composition is bit-identical across engines.
     Scale shape: training as in the trainer (one scan-aggregate per
-    iteration); scoring is ONE more corpus scan against the broadcast
-    1-row final weights; the confusion reduce is a 4-counter global
-    aggregate with map-side partials."""
-    _outs, final_w, feat = _perceptron_frames(spark, sf_dir)
-    scored = feat.crossJoin(F.broadcast(final_w.select("w1", "w2", "w3", "w4", "b"))).select(
-        "y", F.expr("w1*x1 + w2*x2 + w3*x3 + w4*x4 + b").alias("m")
-    )
+    iteration, while the query is built); scoring is ONE more corpus
+    scan with the final weights inlined as literals (no join); the
+    confusion reduce is a 4-counter global aggregate with map-side
+    partials."""
+    traj, feat = _perceptron_frames(spark, sf_dir)
+    scored = feat.selectExpr("y", f"{_perc_margin_sql(traj[-1][2:])} AS m")
     cm = scored.agg(
         F.sum(F.when((F.col("y") == 1) & (F.col("m") > 0), 1).otherwise(0))
         .cast("long")

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from wiki_references_db_spark.queries import register
 from wiki_references_db_spark.streaming.windows import windowed_event_counts
+from wiki_references_db_spark.tables import table_path, table_schema
 
 _DSUM = (
     "CAST(CAST(SUM(CAST(value AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE)"
@@ -32,8 +33,8 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wiki_references_db_spark.tables import _pin_utc
 
     _pin_utc(spark)
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    path = table_path(sf_dir, "events")
+    schema = table_schema(spark, sf_dir, "events")
     if os.path.isdir(path):
         # Spark-written layout (degenerate-corpus sweeps, stress tool):
         # a directory of part files — point the file source at it.
@@ -967,8 +968,8 @@ def stream_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = f"{sf_dir}/documents.parquet"
-    schema = spark.read.parquet(path).schema
+    path = table_path(sf_dir, "documents")
+    schema = table_schema(spark, sf_dir, "documents")
     if os.path.isdir(path):
         return spark.readStream.schema(schema).parquet(path)
     return (
@@ -1138,8 +1139,8 @@ def stream_dedup_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = f"{sf_dir}/embeddings.parquet"
-    schema = spark.read.parquet(path).schema
+    path = table_path(sf_dir, "embeddings")
+    schema = table_schema(spark, sf_dir, "embeddings")
     if os.path.isdir(path):
         return spark.readStream.schema(schema).parquet(path)
     return (
@@ -1795,21 +1796,21 @@ def stream_perceptron_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     classifier ONCE on the static corpus slice (``doc_id % 10 != 0``,
     the same three unrolled full-batch iterations as
     ``perceptron_quality_train``), then score arriving documents
-    (``doc_id % 10 = 0``) per micro-batch against the frozen broadcast
-    weights — the train -> serve -> stream deployment loop of a
-    bootstrapped quality filter, as one checked query.  Emits one row
-    per streamed document: the raw integer margin, the thresholded
-    prediction (positive iff margin > 0), and the weak label.
+    (``doc_id % 10 = 0``) per micro-batch against the frozen weights —
+    the train -> serve -> stream deployment loop of a bootstrapped
+    quality filter, as one checked query.  Emits one row per streamed
+    document: the raw integer margin, the thresholded prediction
+    (positive iff margin > 0), and the weak label.
 
-    Scale shape: training touches the corpus once per iteration and is
-    pinned BEFORE the stream starts (an eager localCheckpoint — the
-    weights are 1 row, so the checkpoint is parameter-sized); each
-    micro-batch is then a map-only projection + broadcast join against
-    5 integers, so per-batch cost is linear in delta size and
-    independent of corpus size, with no corpus-side work at all after
-    training."""
+    Scale shape: training touches the corpus once per iteration and
+    finishes BEFORE the stream starts, leaving five integers on the
+    driver; each micro-batch is then a map-only projection with those
+    weights inlined as literals, so per-batch cost is linear in delta
+    size and independent of corpus size, with no corpus-side work (and
+    no join) at all after training."""
     from wiki_references_db_spark.queries.pipeline_extra import (
         _doc_features,
+        _perc_margin_sql,
         _perceptron_loop,
     )
     from wiki_references_db_spark.storage import persist_corpus
@@ -1822,8 +1823,8 @@ def stream_perceptron_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    _outs, final_w = _perceptron_loop(spark, corpus_feat)
-    weights = final_w.localCheckpoint(eager=True)
+    weights = _perceptron_loop(corpus_feat)[-1][2:]
+    corpus_feat.unpersist()
 
     out_dir = tempfile.mkdtemp(prefix="stream_perc_sink_")
 
@@ -1831,14 +1832,12 @@ def stream_perceptron_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         bf = _doc_features(
             batch_df.filter(F.col("doc_id") % 10 == 0), with_id=True
         )
-        scored = bf.crossJoin(F.broadcast(weights)).select(
+        margin = _perc_margin_sql(weights)
+        scored = bf.selectExpr(
             "doc_id",
-            F.expr("w1*x1 + w2*x2 + w3*x3 + w4*x4 + b").alias("margin"),
-            F.expr(
-                "CAST(IF(w1*x1 + w2*x2 + w3*x3 + w4*x4 + b > 0, 1, 0)"
-                " AS BIGINT)"
-            ).alias("pred"),
-            F.col("y").alias("label"),
+            f"{margin} AS margin",
+            f"CAST(IF({margin} > 0, 1, 0) AS BIGINT) AS pred",
+            "y AS label",
         )
         _write_batch_idempotent(scored, batch_id, os.path.join(out_dir, "s"))
 
@@ -1864,7 +1863,6 @@ def stream_perceptron_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = spark.createDataFrame(
             [], "doc_id bigint, margin bigint, pred bigint, label bigint"
         )
-    corpus_feat.unpersist()
     shutil.rmtree(out_dir, ignore_errors=True)
     shutil.rmtree(ckpt_dir, ignore_errors=True)
     return result

@@ -2488,6 +2488,50 @@ _PQR_ADIST_SQL = (
 )
 
 
+def _pq_codebook(e: DataFrame) -> DataFrame:
+    """The PQ codebook as ONE row ``cb``: a (cb_s, code, cent) struct per
+    subspace and code — the subvectors of vec_id < _PQR_CODES — sorted by
+    subspace, then code.  Broadcast it for ``_pq_nearest``."""
+    subspaces = F.array([F.lit(i) for i in range(_PQR_NSUB)])
+    return (
+        e.filter(F.col("vec_id") < _PQR_CODES)
+        .select(
+            F.col("vec_id").cast("int").alias("code"),
+            F.explode(subspaces).alias("cb_s"),
+            "embedding",
+        )
+        .select(
+            "cb_s",
+            "code",
+            F.expr(
+                f"slice(embedding, cb_s * {_PQR_SUBDIM} + 1, {_PQR_SUBDIM})"
+            ).alias("cent"),
+        )
+        .agg(
+            F.array_sort(F.collect_list(F.struct("cb_s", "code", "cent"))).alias(
+                "cb"
+            )
+        )
+    )
+
+
+def _pq_nearest(s: str) -> str:
+    """SQL over the codebook row ``cb``: the entry of subspace ``s``
+    nearest to the subvector ``sub``, as struct(code, cent, d).  A
+    map-side argmin fold, no window: strict < over the code-ascending
+    scan keeps the smallest code on identical distances, the oracle
+    window's (dist2 ASC, code ASC) tie-break."""
+    return (
+        "aggregate("
+        f"transform(filter(cb, c -> c.cb_s = {s}), c -> named_struct("
+        "'code', c.code, 'cent', c.cent, "
+        f"'d', {_PQR_SUBDIST.replace('cent', 'c.cent')})), "
+        "named_struct('code', CAST(NULL AS INT), "
+        "'cent', CAST(NULL AS ARRAY<FLOAT>), 'd', CAST(NULL AS DOUBLE)), "
+        "(b, x) -> IF(b.code IS NULL OR x.d < b.d, x, b))"
+    )
+
+
 _IVF_PQ_ORACLE_SQL = f"""
     WITH {_NORMS_SQL.strip()},
     subs AS (
@@ -2600,7 +2644,7 @@ def ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark-first scale shape: every stage is the scale form of its
     family — the codebook and coarse centroids broadcast; PQ encoding
-    is a map-side fan-out + rank-limit window on (vec, subspace); cell
+    is a map-side argmin fold per subspace (no shuffle); cell
     probing joins on the cell key (1/n_cells of the corpus touched per
     probe); the ADC pass only scores candidates, and the expensive
     exact cosine touches at most shortlist x queries rows.
@@ -2609,39 +2653,24 @@ def ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table_parallel(spark, sf_dir, "embeddings")
     # --- PQ encode the corpus --------------------------------------------
-    subspaces = F.array([F.lit(i) for i in range(_PQR_NSUB)])
-    subs = e.select(
-        "vec_id", "embedding", F.explode(subspaces).alias("s")
-    ).select(
-        "vec_id",
-        "s",
-        F.expr(
-            f"slice(embedding, s * {_PQR_SUBDIM} + 1, {_PQR_SUBDIM})"
-        ).alias("sub"),
+    # Each vector's reconstruction is its nearest codebook entries,
+    # concatenated in subspace order, all map-side: no n x 8 x codes
+    # distance rows are shuffled, and no per-vector regrouping either.
+    subs = (
+        f"transform(sequence(0, {_PQR_NSUB - 1}),"
+        f" s -> slice(embedding, s * {_PQR_SUBDIM} + 1, {_PQR_SUBDIM}))"
     )
-    codebook = subs.filter(F.col("vec_id") < _PQR_CODES).select(
-        F.col("vec_id").cast("int").alias("code"),
-        F.col("s").alias("cb_s"),
-        F.col("sub").alias("cent"),
-    )
-    cdists = subs.join(
-        F.broadcast(codebook), F.col("cb_s") == F.col("s")
-    ).select(
-        "vec_id", "s", "code", "cent", F.expr(_PQR_SUBDIST).alias("dist2")
-    )
-    w_code = Window.partitionBy("vec_id", "s").orderBy("dist2", "code")
-    codes = (
-        cdists.withColumn("rk", F.row_number().over(w_code))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "s", "cent")
-    )
-    recon = codes.groupBy("vec_id").agg(
-        F.flatten(
+    # With an empty codebook no vector has a reconstruction, as in the
+    # oracle, whose ranking window then has no rows.
+    recon = (
+        e.crossJoin(F.broadcast(_pq_codebook(e)))
+        .filter(F.size("cb") > 0)
+        .select(
+            "vec_id",
             F.expr(
-                "transform(array_sort(collect_list(struct(s, cent))),"
-                " x -> x.cent)"
-            )
-        ).alias("rvec")
+                f"flatten(transform({subs}, (sub, s) -> {_pq_nearest('s')}.cent))"
+            ).alias("rvec"),
+        )
     )
     # --- coarse IVF assign + probes (same construction as ann_ivf_probe) -
     # r13 optimization (guide §2.3/§2.4, mirrors ann_ivf_probe): norms

@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.sql.utils import AnalysisException
 
 TESTDATA_TABLES = (
@@ -21,6 +22,59 @@ TESTDATA_TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# The reference tables' schemas as Spark infers them from the testdata
+# (the same at every scale factor).  Reading with a declared schema plans
+# the scan with no job; inference runs a one-task job over the parquet
+# footers on every load.  ``events`` is left out: ``_load_events``
+# dispatches on the type ``ts`` is read as (TIMESTAMP_NTZ in the
+# testdata, TIMESTAMP in Spark-written copies, BIGINT for nanosecond
+# files), so it needs the file's own type.
+TESTDATA_SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE,"
+        " c_mktsegment STRING"
+    ),
+    "supplier": (
+        "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"
+    ),
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING,"
+        " p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,"
+        " o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ,"
+        " o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT,"
+        " l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE,"
+        " l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING,"
+        " l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "documents": (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING,"
+        " n_chars BIGINT"
+    ),
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> str | StructType:
+    """The schema reference table ``name`` is stored with: its declared
+    DDL string, or, for a table without one, the schema inferred from
+    the parquet footers (one Spark job)."""
+    ddl = TESTDATA_SCHEMAS.get(name)
+    if ddl is not None:
+        return ddl
+    return spark.read.parquet(table_path(sf_dir, name)).schema
 
 
 def _pin_utc(spark: SparkSession) -> None:
@@ -42,20 +96,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _pin_utc(spark)
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.schema(table_schema(spark, sf_dir, name)).parquet(
+        table_path(sf_dir, name)
+    )
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet stores ``ts`` as TIMESTAMP(NANOS) which Spark 4 only
-    reads via the nanosAsLong legacy conf; normalize to TimestampType
-    (microsecond truncation) regardless of which way it was read."""
+    """Normalize ``ts`` to TimestampType whichever way it is read: the
+    testdata's TIMESTAMP(MICROS, not UTC-adjusted) as TIMESTAMP_NTZ, a
+    TIMESTAMP(NANOS) file as BIGINT nanoseconds under the nanosAsLong
+    legacy conf (microsecond truncation), a Spark-written copy as
+    TIMESTAMP already."""
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except AnalysisException:
         # Non-modifiable at runtime on this session; the dtype dispatch
         # below handles whichever way the file was read.
         pass
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = spark.read.parquet(table_path(sf_dir, "events"))
     dtype = dict(df.dtypes).get("ts")
     from pyspark.sql import functions as F
 
@@ -94,7 +152,7 @@ def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     df = load_table(spark, sf_dir, name)
     par = spark.sparkContext.defaultParallelism
     try:
-        size = _table_size_bytes(os.path.join(sf_dir, f"{name}.parquet"))
+        size = _table_size_bytes(table_path(sf_dir, name))
         max_pb = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
         # Ceiling division, like Spark's split packing (which additionally
         # pads openCostInBytes per file — this estimate is a lower bound,
