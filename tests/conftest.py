@@ -42,3 +42,18 @@ def count_jobs(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def count_compiles(spark):
+    """``count_compiles(fn)`` runs ``fn()`` and returns the number of
+    classes Spark's code generator compiled meanwhile; a class found in
+    the session's codegen cache compiles none."""
+    timer = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(fn) -> int:
+        before = timer.getCount()
+        fn()
+        return timer.getCount() - before
+
+    return run

@@ -11,6 +11,17 @@ the same plans run at both scales:
   a real cluster overrides via spark-submit conf.
 - ZSTD parquet compression, matching the reference's staging choice
   (reference:build_db.py:146).
+- A generated-code cache sized to the engine's working set, so a session
+  compiles each whole-stage/expression class once and reuses it.  Spark's
+  default (100 entries) is smaller than one pass of four registered
+  queries (128 classes), and its segmented LRU evicts well before it is
+  full, so every repeated query recompiled most of its classes through
+  Janino.  4096 entries hold the widest measured working set, the 69
+  headline queries of ``bench.py`` (about 1,540 classes), with room to
+  spare.  In a long-running server the cache also bounds how many one-off
+  classes it keeps: a request whose plan carries int/long literals (a
+  ``page_id`` or ``revision_id`` route) compiles new classes, while the
+  string-keyed card routes reuse theirs.
 """
 
 from __future__ import annotations
@@ -33,6 +44,8 @@ _DEFAULTS = {
     # events.parquet uses TIMESTAMP(NANOS); Spark 4 reads it only as long.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    # A static conf: it takes effect only when set before the session starts.
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 
