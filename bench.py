@@ -130,7 +130,7 @@ def main() -> None:
     # fresh plan over the full data.  That holds only because the
     # session's cache (``session._DEFAULTS``, 4096 entries) is larger than
     # the headline's working set of about 1,540 classes: at Spark's
-    # default 100 entries the warm-up itself recompiled 1,973 classes and
+    # default 100 entries the warm-up itself compiled about 1,960 classes and
     # the timed runs found almost none of them.  ``warmup_compiles`` and
     # the per-query ``compiles`` of the timed runs on the extended line
     # show whether it held.
